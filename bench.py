@@ -38,21 +38,6 @@ RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "7"))
 REPO = os.path.dirname(os.path.abspath(__file__))
 
 
-# Floors deliberately given up for correctness: best-prior mins below
-# these values predate the cited change and are structurally
-# unreachable, so the regression gate clamps to the reset instead of
-# flagging the same accepted delta every round.
-ACCEPTED_FLOOR_RESETS: dict[str, tuple[float, str]] = {
-    # (empty since r10) tumbling_window_counts carried a 0.28 floor —
-    # the r7 DECIMAL(28,6) tie-safe sum was believed to cost ~45 ms and
-    # r9's quiet-window hunts reproduced 0.281/0.287 — but r10 measured
-    # min 0.238 on byte-identical code in a quiet window, BELOW the
-    # "structurally unreachable" floor: the r9 attribution was machine
-    # noise, not structure. The clamp is removed; the r10 BENCH record
-    # (0.238) is a genuinely comparable at-semantics best-prior for
-    # future rounds.
-}
-
 # The r01 baseline-comparable core set: BASELINE.md's contract
 # ("within 2x of the driver baseline" = BENCH_r01's 6.627 s total) is
 # defined over these eight queries, so "value"/"value_min" keep summing
@@ -93,8 +78,7 @@ WARM_FIRST = {"ivf_pq_search"}
 
 def _prior_mins(sf_label: str) -> dict[str, float]:
     """Best-ever per-query min across prior rounds' BENCH_r*.json at
-    the same sf AND the same core count, clamped up to any
-    ACCEPTED_FLOOR_RESETS entry. The min-of-N is the
+    the same sf AND the same core count. The min-of-N is the
     interference-resistant statistic on this co-tenant host, so
     regressions are judged min-vs-best-min, never mean-vs-mean.
 
@@ -134,11 +118,6 @@ def _prior_mins(sf_label: str) -> dict[str, float]:
                 name not in best or v < best[name]
             ):
                 best[name] = float(v)
-    # sf-label guard: resets are calibrated at the default sf0.1
-    if sf_label == "0.1":
-        for name, (floor, _why) in ACCEPTED_FLOOR_RESETS.items():
-            if name in best and best[name] < floor:
-                best[name] = floor
     return best
 
 

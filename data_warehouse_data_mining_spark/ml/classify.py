@@ -11,7 +11,6 @@ defect d).
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.ml.classification import (
@@ -110,12 +109,9 @@ def cross_validate(
     # and evaluates avgMetrics per param-map index, so parallelism
     # changes wall-clock only, never a metric. Capped at the grid size
     # (CV parallelizes within a fold) and at the session's core count
-    # so a small local[N] run isn't oversubscribed; overridable for
-    # cluster runs where executor count != defaultParallelism.
+    # so a small local[N] run isn't oversubscribed.
     cores = train.sparkSession.sparkContext.defaultParallelism
-    parallelism = int(
-        os.environ.get("SPARK_GRAFT_CV_PARALLELISM", 0)
-    ) or max(1, min(len(maps), cores))
+    parallelism = max(1, min(len(maps), cores))
     cv = CrossValidator(
         estimator=clf,
         estimatorParamMaps=maps,

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from data_warehouse_data_mining_spark.catalog import load
 from data_warehouse_data_mining_spark.functions import texthash as th
+from data_warehouse_data_mining_spark.operators.iterate import iterate
 from data_warehouse_data_mining_spark.registry import register
 
 NUM_HASHES = 16
@@ -713,10 +714,8 @@ def connected_components(
     # materializes it AND truncates the logical plan, so each
     # iteration's plan is one join over a leaf — with persist the
     # optimizer still re-plans the full per-iteration-growing lineage
-    # (the r2 plan audit counted 4,788 codegen ops here). Checkpointed
-    # blocks are released by the ContextCleaner when the DataFrame is
-    # GC'd, so nothing leaks past the query. On a real cluster swap in
-    # a reliable checkpoint dir for executor-loss tolerance.
+    # (the r2 plan audit counted 4,788 codegen ops here). The label
+    # vector's lineage is cut every superstep by ``iterate``.
     bi = (
         edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
@@ -728,31 +727,32 @@ def connected_components(
         .withColumn("lbl", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iters):
+
+    def superstep(labels: DataFrame, _: int) -> DataFrame:
         neighbor_min = (
             bi.join(labels, bi["src"] == labels["node"])
             .groupBy(F.col("dst").alias("node2"))
             .agg(F.min("lbl").alias("nlbl"))
         )
-        new_labels = (
-            labels.join(neighbor_min, labels["node"] == F.col("node2"), "left")
-            .select(
-                "node",
-                F.least(F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))).alias(
-                    "lbl"
-                ),
-            )
-            .localCheckpoint(eager=True)
+        return labels.join(
+            neighbor_min, labels["node"] == F.col("node2"), "left"
+        ).select(
+            "node",
+            F.least(F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))).alias(
+                "lbl"
+            ),
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
+
+    def stable(old: DataFrame, new: DataFrame) -> bool:
+        return (
+            new.alias("n")
+            .join(old.alias("o"), "node")
             .filter(F.col("n.lbl") != F.col("o.lbl"))
             .count()
+            == 0
         )
-        labels = new_labels
-        if changed == 0:
-            break
+
+    labels = iterate(labels, superstep, max_iters, cut_every=1, until=stable)
     return labels.select("node", F.col("lbl").alias("component"))
 
 

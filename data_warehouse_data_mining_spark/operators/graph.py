@@ -2,9 +2,12 @@
 
 Spark has no built-in graph operator set (GraphX is RDD/Scala-only,
 GraphFrames is an external package), but the DataFrame expression of
-the classic algorithms is exactly joins + aggregations in a loop —
-connected components already lives in operators/dedup.py
-(neardup_clusters); this module adds PageRank.
+the classic algorithms is exactly joins + aggregations in a loop:
+PageRank and personalized PageRank over the supplier↔part co-supply
+graph; triangles, degrees, label propagation, modularity, k-core, BFS
+and Adamic-Adar over the part co-purchase graph. Every superstep loop
+runs through ``operators.iterate.iterate``, which owns lineage
+truncation; connected components lives in operators/dedup.py.
 
 Determinism contract: ranks are kept in integer fixed-point (1e12
 units) with floor division, so every engine computes bit-identical
@@ -16,16 +19,77 @@ same iterations as chained CTEs.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_warehouse_data_mining_spark.catalog import load
+from data_warehouse_data_mining_spark.operators.iterate import iterate
 from data_warehouse_data_mining_spark.registry import register
 
 R_UNIT = 1_000_000_000_000  # 1.0 of rank mass, in fixed-point units
 N_ITER = 10
 TOP_K = 50
-CHECKPOINT_EVERY = 5  # truncate iterative lineage every N supersteps
+
+
+def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The part co-purchase graph, one row per undirected edge
+    ``(lo, hi)`` with lo < hi: parts bought together in ≥2 orders. A
+    basket self-join on the order key, then a pair-count filter."""
+    baskets = load(spark, sf_dir).lineitem.select(
+        F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
+    ).distinct()
+    a = baskets.alias("a")
+    b = baskets.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.basket") == F.col("b.basket"))
+            & (F.col("a.item") < F.col("b.item")),
+        )
+        .groupBy(F.col("a.item").alias("lo"), F.col("b.item").alias("hi"))
+        .agg(F.count(F.lit(1)).alias("n_ab"))
+        .filter(F.col("n_ab") >= 2)
+        .select("lo", "hi")
+    )
+
+
+def _directed(e: DataFrame) -> DataFrame:
+    """Both directions of every undirected ``(lo, hi)`` edge, as
+    ``(src, dst)``."""
+    return e.select(F.col("lo").alias("src"), F.col("hi").alias("dst")).unionAll(
+        e.select(F.col("hi").alias("src"), F.col("lo").alias("dst"))
+    )
+
+
+def _contribution_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The supplier↔part co-supply graph (suppliers even, parts odd
+    node ids, from distinct lineitem pairs) as ONE persisted
+    ``(src, dst, d)`` table, d = out-degree of src, pre-partitioned by
+    src: a PageRank superstep joins the rank vector on src, so the edge
+    side never re-exchanges inside the loop and the edges⋈deg join
+    runs once, not once per superstep. The caller unpersists it."""
+    pairs = (
+        load(spark, sf_dir).lineitem.select(
+            (F.col("l_suppkey") * 2).alias("s"),
+            (F.col("l_partkey") * 2 + 1).alias("p"),
+        )
+        .distinct()
+    )
+    edges = pairs.select(
+        F.col("s").alias("src"), F.col("p").alias("dst")
+    ).unionAll(pairs.select(F.col("p").alias("src"), F.col("s").alias("dst")))
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+    return (
+        edges.join(deg, "src")
+        # explicit partition count: an AQE-coalesced cached partitioning
+        # would be whatever the tiny local run lands on and the loop
+        # join could no longer rely on it; defaultParallelism scales
+        # with the session, never a constant tuned to this box
+        .repartition(spark.sparkContext.defaultParallelism, "src")
+        .persist()
+    )
 
 
 def _pagerank_oracle() -> str:
@@ -81,54 +145,20 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     bipartite, derived from distinct lineitem pairs), 10 power
     iterations, damping 0.85.
 
-    Iterative DataFrame shape (r14, guide §2.4/§5 — hoist everything
-    loop-invariant out of the loop): ONE persisted contribution table
-    ``(src, dst, d)``, pre-partitioned by ``src``, replaces the r13
-    shape's separate edges/deg caches — each superstep previously
-    re-ran the edges⋈deg join from the two caches, and the cached
-    partitioning now already satisfies the superstep join's
-    distribution, so the edge side never re-exchanges inside the loop.
-    The node count and teleport constants are loop-invariant SCALARS
-    (one count() on the persisted table — a 1-row driver scalar that
-    parameterizes the plan, recomputed every build, nothing cached
-    across runs); r13 re-derived them per iteration as a 1-row
-    crossJoin broadcast, costing a broadcast build per superstep.
-    Each iteration is then one join of the current rank vector against
-    the contribution table plus one aggregation — the same two-shuffle
-    step GraphX/Pregel executes per superstep, minus the invariant
-    work. Measured at sf0.01 (byte-identical output): warm 6.3 →
-    2.3 s. At 100 TB the rank vector is node-sized (≪ edges). The
-    rank vector is ``localCheckpoint``-ed every ``CHECKPOINT_EVERY``
-    iterations so the lineage (and optimizer/codegen cost) stays
-    O(checkpoint interval) instead of O(total iterations); on a real
-    cluster swap ``localCheckpoint`` for a reliable ``checkpoint`` dir
-    so executor loss doesn't kill the job. After the final checkpoint
-    the contribution cache is released — nothing leaks past the query.
+    Everything loop-invariant is hoisted out of the loop: the persisted
+    contribution table, and the node count and teleport constants as
+    driver SCALARS (one count(), recomputed every build) instead of a
+    1-row crossJoin broadcast per superstep. Each superstep is then
+    one join of the rank vector against the contribution table plus
+    one aggregation — the two-shuffle step GraphX/Pregel executes per
+    superstep. At 100 TB the rank vector is node-sized (≪ edges).
+    Lineage is cut every 5 supersteps: 10 uncut supersteps make the
+    final plan's optimization cost grow with the iteration count.
     Integer fixed-point (1e12 units, floor division) keeps every
     engine bit-identical — see module docstring; the scalar teleport
     constants use the same non-negative floor division in Python.
     """
-    li = load(spark, sf_dir).lineitem
-    pairs = (
-        li.select(
-            (F.col("l_suppkey") * 2).alias("s"),
-            (F.col("l_partkey") * 2 + 1).alias("p"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(
-        F.col("s").alias("src"), F.col("p").alias("dst")
-    ).unionAll(pairs.select(F.col("p").alias("src"), F.col("s").alias("dst")))
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    contrib_edges = (
-        edges.join(deg, "src")
-        # explicit partition count: an AQE-coalesced cached partitioning
-        # would be whatever the tiny local run lands on and the loop
-        # join could no longer rely on it; defaultParallelism scales
-        # with the session, never a constant tuned to this box
-        .repartition(spark.sparkContext.defaultParallelism, "src")
-        .persist()
-    )
+    contrib_edges = _contribution_table(spark, sf_dir)
     # loop-invariant teleport scalars; the count also materializes the
     # cache so every superstep reads the pre-partitioned table
     n = contrib_edges.select("src").distinct().count()
@@ -139,8 +169,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .select("node", F.lit(r0).cast("long").alias("rank"))
     )
-    for it in range(N_ITER):
-        ranks = (
+
+    def superstep(ranks: DataFrame, _: int) -> DataFrame:
+        return (
             contrib_edges.join(ranks, F.col("src") == F.col("node"))
             .select(
                 "dst", F.expr("rank div d").alias("contrib")
@@ -152,11 +183,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.lit(base_add) + F.col("part_rank")).alias("rank"),
             )
         )
-        if (it + 1) % CHECKPOINT_EVERY == 0 and (it + 1) < N_ITER:
-            # lazy: the plan is truncated immediately (LogicalRDD leaf)
-            # but materialization folds into the final eager checkpoint's
-            # job instead of a separate driver round-trip per segment
-            ranks = ranks.localCheckpoint(eager=False)
+
+    ranks = iterate(ranks, superstep, N_ITER, cut_every=5)
     ranks = ranks.localCheckpoint(eager=True)
     # final ranks are materialized above, so the scan-side cache can go
     contrib_edges.unpersist()
@@ -226,25 +254,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-orientation if hub skew appears). Wedges come from the integer
     degree table; transitivity = 3Δ/wedges is one final exact-ratio
     division."""
-    li = load(spark, sf_dir).lineitem
-    baskets = li.select(
-        F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
-    ).distinct()
-    a = baskets.alias("a")
-    b = baskets.alias("b")
-    e = (
-        a.join(
-            b,
-            (F.col("a.basket") == F.col("b.basket"))
-            & (F.col("a.item") < F.col("b.item")),
-        )
-        .groupBy(F.col("a.item").alias("lo"), F.col("b.item").alias("hi"))
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .filter(F.col("n_ab") >= 2)
-        .select("lo", "hi")
-        # edge table feeds three joins + the degree agg; materialize once
-        .localCheckpoint(eager=True)
-    )
+    # edge table feeds three joins + the degree agg; materialize once
+    e = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
     e1 = e.select(F.col("lo").alias("a_"), F.col("hi").alias("b_"))
     e2 = e.select(F.col("lo").alias("b_"), F.col("hi").alias("c_"))
     e3 = e.select(F.col("lo").alias("a_"), F.col("hi").alias("c_"))
@@ -308,23 +319,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     hub-splitting (degree-ordered orientation, salting) before its
     joins. Two hash-aggs over the edge list; the distribution is
     degree-cardinality, tiny at any scale."""
-    li = load(spark, sf_dir).lineitem
-    baskets = li.select(
-        F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
-    ).distinct()
-    a = baskets.alias("a")
-    b = baskets.alias("b")
-    e = (
-        a.join(
-            b,
-            (F.col("a.basket") == F.col("b.basket"))
-            & (F.col("a.item") < F.col("b.item")),
-        )
-        .groupBy(F.col("a.item").alias("lo"), F.col("b.item").alias("hi"))
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .filter(F.col("n_ab") >= 2)
-        .select("lo", "hi")
-    )
+    e = _copurchase_edges(spark, sf_dir)
     deg = (
         e.select(F.col("lo").alias("node"))
         .unionAll(e.select(F.col("hi").alias("node")))
@@ -345,7 +340,34 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 LP_ITER = 5
-LP_CHECKPOINT_EVERY = 2
+
+
+def _min_labels(edges: DataFrame) -> DataFrame:
+    """``(node, label)`` after LP_ITER synchronized min-label supersteps
+    over the directed edge list ``(src, dst)``: every node starts with
+    its own id and each superstep adopts the minimum of its own and its
+    neighbors' labels — one edges⋈labels join plus one min-aggregation,
+    the Pregel message pattern. Lineage is cut every 2 supersteps."""
+
+    def superstep(labels: DataFrame, _: int) -> DataFrame:
+        nbr_min = (
+            edges.join(
+                labels.select(
+                    F.col("node").alias("dst"), F.col("label").alias("nl")
+                ),
+                "dst",
+            )
+            .groupBy("src")
+            .agg(F.min("nl").alias("nbr"))
+        )
+        return labels.join(nbr_min, labels.node == nbr_min.src).select(
+            "node", F.least("label", "nbr").alias("label")
+        )
+
+    labels = edges.select(F.col("src").alias("node")).distinct().select(
+        "node", F.col("node").cast("long").alias("label")
+    )
+    return iterate(labels, superstep, LP_ITER, cut_every=2)
 
 
 def _label_prop_oracle() -> str:
@@ -410,57 +432,12 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic, unlike frequency-based LPA whose ties need RNG —
     which is what makes an exact cross-engine oracle possible.
 
-    Iterative DataFrame shape, like graph_pagerank: each superstep is
-    one edges⋈labels join + one min-aggregation (the Pregel message
-    pattern); the label vector is node-sized and localCheckpoint-ed
-    every LP_CHECKPOINT_EVERY supersteps so lineage stays bounded (swap
-    for reliable checkpoint() on a cluster). The output is the
-    community-size distribution — bounded by the largest community, not
-    by graph size."""
-    li = load(spark, sf_dir).lineitem
-    baskets = li.select(
-        F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
-    ).distinct()
-    a = baskets.alias("a")
-    b = baskets.alias("b")
-    e0 = (
-        a.join(
-            b,
-            (F.col("a.basket") == F.col("b.basket"))
-            & (F.col("a.item") < F.col("b.item")),
-        )
-        .groupBy(F.col("a.item").alias("lo"), F.col("b.item").alias("hi"))
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .filter(F.col("n_ab") >= 2)
-        .select("lo", "hi")
-    )
-    edges = (
-        e0.select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
-        .unionAll(e0.select(F.col("hi").alias("src"), F.col("lo").alias("dst")))
-        # every superstep joins against the edge list; materialize once
-        .localCheckpoint(eager=True)
-    )
-    labels = edges.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").cast("long").alias("label")
-    )
-    for it in range(LP_ITER):
-        nbr_min = (
-            edges.join(
-                labels.select(
-                    F.col("node").alias("dst"), F.col("label").alias("nl")
-                ),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("nl").alias("nbr"))
-        )
-        labels = (
-            labels.join(nbr_min, labels.node == nbr_min.src)
-            .select("node", F.least("label", "nbr").alias("label"))
-        )
-        if (it + 1) % LP_CHECKPOINT_EVERY == 0 and (it + 1) < LP_ITER:
-            labels = labels.localCheckpoint(eager=False)
-    comm = labels.groupBy("label").agg(
+    The supersteps are ``_min_labels``; the label vector is node-sized.
+    The output is the community-size distribution — bounded by the
+    largest community, not by graph size."""
+    # every superstep joins against the edge list; materialize once
+    edges = _directed(_copurchase_edges(spark, sf_dir)).localCheckpoint(eager=True)
+    comm = _min_labels(edges).groupBy("label").agg(
         F.count(F.lit(1)).alias("community_size")
     )
     return (
@@ -533,29 +510,13 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Iterative DataFrame shape: per round one degree aggregation + two
     LEFT SEMI joins filtering the edge list (never IN-subquery
-    materialization on the driver), edge table localCheckpoint-ed per
-    round so lineage stays O(1) per round — the graph_pagerank contract
-    applied to a shrinking edge set."""
-    li = load(spark, sf_dir).lineitem
-    baskets = li.select(
-        F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
-    ).distinct()
-    a = baskets.alias("a")
-    b = baskets.alias("b")
-    e = (
-        a.join(
-            b,
-            (F.col("a.basket") == F.col("b.basket"))
-            & (F.col("a.item") < F.col("b.item")),
-        )
-        .groupBy(F.col("a.item").alias("lo"), F.col("b.item").alias("hi"))
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .filter(F.col("n_ab") >= 2)
-        .select("lo", "hi")
-        .localCheckpoint(eager=True)
-    )
-    rows = []
-    for i in range(KCORE_PEELS):
+    materialization on the driver). Each round's survivors feed the
+    next degree agg AND the stats row, so lineage is cut every
+    round."""
+    peeled, kept = [], []  # each round's input edges and kept nodes
+
+    def peel(e: DataFrame, _: int) -> DataFrame:
+        peeled.append(e)
         deg = (
             e.select(F.col("lo").alias("node"))
             .unionAll(e.select(F.col("hi").alias("node")))
@@ -563,29 +524,23 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("d"))
         )
         keep = deg.filter(F.col("d") >= KCORE_K).select("node")
-        e = (
+        kept.append(keep)
+        return (
             e.join(keep.withColumnRenamed("node", "lo"), "lo", "left_semi")
             .join(keep.withColumnRenamed("node", "hi"), "hi", "left_semi")
             .select("lo", "hi")
-            # each round's survivors feed the next degree agg AND the
-            # stats row — truncate lineage per round. LAZY (r14): the
-            # truncation happens at plan level immediately; the RDD
-            # materializes once inside the final job instead of paying
-            # one scheduled driver job per peel (measured at sf0.01:
-            # min 2.28 -> 1.71 s, rows identical).
-            .localCheckpoint(eager=False)
         )
-        n_nodes = keep.agg(F.count(F.lit(1)).alias("n_nodes"))
-        n_edges = e.agg(F.count(F.lit(1)).alias("n_edges"))
-        rows.append(
-            n_nodes.crossJoin(F.broadcast(n_edges)).select(
-                F.lit(i + 1).alias("peel"), "n_nodes", "n_edges"
-            )
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionAll(r)
-    return out.orderBy("peel")
+
+    e = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
+    peeled.append(iterate(e, peel, KCORE_PEELS, cut_every=1))
+    rows = [
+        keep.agg(F.count(F.lit(1)).alias("n_nodes"))
+        .crossJoin(F.broadcast(e.agg(F.count(F.lit(1)).alias("n_edges"))))
+        .select(F.lit(i + 1).alias("peel"), "n_nodes", "n_edges")
+        # round i's survivors are round i + 1's input
+        for i, (keep, e) in enumerate(zip(kept, peeled[1:]))
+    ]
+    return reduce(DataFrame.unionAll, rows).orderBy("peel")
 
 
 BFS_LAYERS = 4
@@ -650,69 +605,47 @@ def graph_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Iterative frontier shape: each round joins the frontier against
     the edge list and anti-joins the visited set (LEFT ANTI — never an
-    IN-list on the driver), with frontier AND visited checkpointed per
-    round; visited is node-bounded, frontiers shrink as the graph
-    saturates. The oracle unrolls the same rounds with MATERIALIZED
-    CTEs (each layer feeds three consumers)."""
-    li = load(spark, sf_dir).lineitem
-    baskets = li.select(
-        F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
-    ).distinct()
-    a = baskets.alias("a")
-    b = baskets.alias("b")
-    e0 = (
-        a.join(
-            b,
-            (F.col("a.basket") == F.col("b.basket"))
-            & (F.col("a.item") < F.col("b.item")),
-        )
-        .groupBy(F.col("a.item").alias("lo"), F.col("b.item").alias("hi"))
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .filter(F.col("n_ab") >= 2)
-        .select("lo", "hi")
-    )
-    edges = (
-        e0.select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
-        .unionAll(e0.select(F.col("hi").alias("src"), F.col("lo").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
+    IN-list on the driver), with frontier AND visited cut every round;
+    visited is node-bounded, frontiers shrink as the graph saturates.
+    The oracle unrolls the same rounds with MATERIALIZED CTEs (each
+    layer feeds three consumers)."""
+    edges = _directed(_copurchase_edges(spark, sf_dir)).localCheckpoint(eager=True)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     root = (
         deg.orderBy(F.col("d").desc(), F.col("src"))
         .limit(1)
         .select(F.col("src").alias("node"))
-        # lazy (r14): truncates lineage now, materializes in the final
-        # job — same for the per-round frontier/visited checkpoints
-        # below (measured at sf0.01: min 1.95 -> 1.37 s, rows equal)
+        # lazy: truncates lineage now, materializes in the final job
         .localCheckpoint(eager=False)
     )
-    frontier = root
-    visited = root
-    rows = [
-        root.agg(F.count(F.lit(1)).alias("n_nodes")).select(
-            F.lit(0).alias("layer"), "n_nodes"
+    rows = []
+
+    def layer_row(frontier: DataFrame, layer: int) -> DataFrame:
+        return frontier.agg(F.count(F.lit(1)).alias("n_nodes")).select(
+            F.lit(layer).alias("layer"), "n_nodes"
         )
-    ]
-    for i in range(BFS_LAYERS):
-        frontier = (
+
+    def expand(state: tuple, i: int) -> tuple:
+        # state: (layer i, every node reached before layer i). visited
+        # is built here from the already-cut frontier: built from the
+        # next, uncut frontier, the round's two cuts would each
+        # recompute that frontier
+        frontier, seen = state
+        rows.append(layer_row(frontier, i))
+        visited = seen.unionAll(frontier)
+        nxt = (
             edges.join(
                 frontier.withColumnRenamed("node", "src"), "src", "left_semi"
             )
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited, "node", "left_anti")
-            .localCheckpoint(eager=False)
         )
-        visited = visited.unionAll(frontier).localCheckpoint(eager=False)
-        rows.append(
-            frontier.agg(F.count(F.lit(1)).alias("n_nodes")).select(
-                F.lit(i + 1).alias("layer"), "n_nodes"
-            )
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionAll(r)
-    return out.orderBy("layer")
+        return nxt, visited
+
+    frontier, _ = iterate((root, root.limit(0)), expand, BFS_LAYERS, cut_every=1)
+    rows.append(layer_row(frontier, BFS_LAYERS))
+    return reduce(DataFrame.unionAll, rows).orderBy("layer")
 
 
 N_ITER_PPR = 5
@@ -793,28 +726,10 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same integer fixed-point determinism contract as graph_pagerank
     (module docstring); the oracle unrolls the identical recurrence.
 
-    Loop-invariant hoisting (r14, same rewrite as graph_pagerank,
-    measured there): ONE persisted (src, dst, d) contribution table
-    pre-partitioned by src replaces the separate edges/deg caches, and
-    the seed count + teleport constants are computed once as scalars
-    instead of a per-iteration 1-row crossJoin broadcast."""
-    li = load(spark, sf_dir).lineitem
-    pairs = (
-        li.select(
-            (F.col("l_suppkey") * 2).alias("s"),
-            (F.col("l_partkey") * 2 + 1).alias("p"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(
-        F.col("s").alias("src"), F.col("p").alias("dst")
-    ).unionAll(pairs.select(F.col("p").alias("src"), F.col("s").alias("dst")))
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    contrib_edges = (
-        edges.join(deg, "src")
-        .repartition(spark.sparkContext.defaultParallelism, "src")
-        .persist()
-    )
+    Loop invariants are hoisted as in graph_pagerank: the shared
+    contribution table, and the seed count + teleport constants as
+    scalars instead of a per-iteration 1-row crossJoin broadcast."""
+    contrib_edges = _contribution_table(spark, sf_dir)
     seeds = (
         contrib_edges.filter(
             (F.col("src") % 2 == 0) & (F.expr("src div 2") <= N_SEEDS)
@@ -831,7 +746,8 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = (15 * r0) // 100
     seed_base = seeds.select("node", F.lit(b).cast("long").alias("b"))
     ranks = seeds.select("node", F.lit(r0).cast("long").alias("rank"))
-    for it in range(N_ITER_PPR):
+
+    def superstep(ranks: DataFrame, _: int) -> DataFrame:
         spread = (
             contrib_edges.join(ranks, F.col("src") == F.col("node"))
             .select("dst", F.expr("rank div d").alias("contrib"))
@@ -839,7 +755,7 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.expr("(85 * sum(contrib)) div 100").alias("spread"))
             .select(F.col("dst").alias("node"), "spread")
         )
-        ranks = (
+        return (
             spread.join(seed_base, "node", "full_outer")
             .select(
                 "node",
@@ -849,6 +765,9 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).cast("long").alias("rank"),
             )
         )
+
+    # never cut: five sparse supersteps plan cheaply uncut
+    ranks = iterate(ranks, superstep, N_ITER_PPR, cut_every=N_ITER_PPR)
     ranks = ranks.localCheckpoint(eager=True)
     contrib_edges.unpersist()
     seeds.unpersist()
@@ -947,50 +866,10 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pregel joins as graph_label_propagation; modularity itself adds
     one edge-keyed membership join (L_c) and one node-keyed degree
     rollup (D_c), both label-keyed aggregates after."""
-    li = load(spark, sf_dir).lineitem
-    baskets = li.select(
-        F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
-    ).distinct()
-    a = baskets.alias("a")
-    b = baskets.alias("b")
-    e0 = (
-        a.join(
-            b,
-            (F.col("a.basket") == F.col("b.basket"))
-            & (F.col("a.item") < F.col("b.item")),
-        )
-        .groupBy(F.col("a.item").alias("lo"), F.col("b.item").alias("hi"))
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .filter(F.col("n_ab") >= 2)
-        .select("lo", "hi")
-        # read three times: edges union, m count, intra-edge join
-        .localCheckpoint(eager=True)
-    )
-    edges = (
-        e0.select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
-        .unionAll(e0.select(F.col("hi").alias("src"), F.col("lo").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
-    labels = edges.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").cast("long").alias("label")
-    )
-    for it in range(LP_ITER):
-        nbr_min = (
-            edges.join(
-                labels.select(
-                    F.col("node").alias("dst"), F.col("label").alias("nl")
-                ),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("nl").alias("nbr"))
-        )
-        labels = labels.join(nbr_min, labels.node == nbr_min.src).select(
-            "node", F.least("label", "nbr").alias("label")
-        )
-        if (it + 1) % LP_CHECKPOINT_EVERY == 0 and (it + 1) < LP_ITER:
-            labels = labels.localCheckpoint(eager=False)
-    labels = labels.localCheckpoint(eager=True)  # read 2x below
+    # read three times: edges union, m count, intra-edge join
+    e0 = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = _directed(e0).localCheckpoint(eager=True)
+    labels = _min_labels(edges).localCheckpoint(eager=True)  # read 2x below
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
     )
@@ -1094,28 +973,10 @@ def adamic_adar_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     (top-d by weight) before the wedge join, the same mitigation the
     triangle count documents. Existing edges are removed by an
     anti-join, never materializing the non-edge complement."""
-    t = load(spark, sf_dir)
-    baskets = t.lineitem.select(
-        F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
-    ).distinct()
-    b2 = baskets.select(
-        F.col("basket").alias("basket2"), F.col("item").alias("item2")
-    )
-    e = (
-        baskets.join(
-            b2,
-            (F.col("basket") == F.col("basket2"))
-            & (F.col("item") < F.col("item2")),
-        )
-        .groupBy(F.col("item").alias("lo"), F.col("item2").alias("hi"))
-        .agg(F.count(F.lit(1)).alias("n_cobuys"))
-        .filter(F.col("n_cobuys") >= 2)
-        .select("lo", "hi")
-        # narrow staged edge table (2 longs/row, catalog-pair-sized —
-        # the grid_lof staged-model-table precedent): sym/deg/wedge/
-        # anti-join otherwise re-derive the basket self-join 7x
-        .localCheckpoint(eager=True)
-    )
+    # narrow staged edge table (2 longs/row, catalog-pair-sized — the
+    # grid_lof staged-model-table precedent): sym/deg/wedge/anti-join
+    # otherwise re-derive the basket self-join 7x
+    e = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
     sym = e.select(F.col("lo").alias("a"), F.col("hi").alias("b")).unionAll(
         e.select(F.col("hi").alias("a"), F.col("lo").alias("b"))
     )
@@ -1227,25 +1088,7 @@ def adamic_adar_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is O(CAP² · |nodes|) regardless of the degree distribution;
     everything else matches the uncapped twin (one staged edge table,
     anti-join for non-edges, exact integer scores)."""
-    t = load(spark, sf_dir)
-    baskets = t.lineitem.select(
-        F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
-    ).distinct()
-    b2 = baskets.select(
-        F.col("basket").alias("basket2"), F.col("item").alias("item2")
-    )
-    e = (
-        baskets.join(
-            b2,
-            (F.col("basket") == F.col("basket2"))
-            & (F.col("item") < F.col("item2")),
-        )
-        .groupBy(F.col("item").alias("lo"), F.col("item2").alias("hi"))
-        .agg(F.count(F.lit(1)).alias("n_cobuys"))
-        .filter(F.col("n_cobuys") >= 2)
-        .select("lo", "hi")
-        .localCheckpoint(eager=True)
-    )
+    e = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
     sym = e.select(F.col("lo").alias("a"), F.col("hi").alias("b")).unionAll(
         e.select(F.col("hi").alias("a"), F.col("lo").alias("b"))
     )

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from data_warehouse_data_mining_spark.catalog import load
 from data_warehouse_data_mining_spark.functions import vectors as V
+from data_warehouse_data_mining_spark.operators.iterate import iterate
 from data_warehouse_data_mining_spark.registry import register
 
 DIM = 64
@@ -2589,7 +2590,7 @@ def _mmr_greedy(cand: DataFrame) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     w1 = W.partitionBy("q_id").orderBy(F.col("rel").desc(), "neighbor_id")
-    selected = (
+    first = (
         cand.withColumn("rn", F.row_number().over(w1))
         .filter(F.col("rn") == 1)
         .select(
@@ -2600,7 +2601,9 @@ def _mmr_greedy(cand: DataFrame) -> DataFrame:
             (F.lit(MMR_LAMBDA) * F.col("rel")).alias("mmr"),
         )
     )
-    for i in range(1, MMR_K):
+
+    def pick_next(selected: DataFrame, i: int) -> DataFrame:
+        """Superstep i appends pick i + 2 to the picks so far."""
         sel_ids = selected.select(
             F.col("q_id").alias("sq"), F.col("neighbor_id").alias("sid")
         )
@@ -2638,12 +2641,14 @@ def _mmr_greedy(cand: DataFrame) -> DataFrame:
             .select(
                 "q_id",
                 "neighbor_id",
-                F.lit(i + 1).alias("pick_rank"),
+                F.lit(i + 2).alias("pick_rank"),
                 "rel",
                 "mmr",
             )
         )
-        selected = selected.unionByName(pick).localCheckpoint(eager=True)
+        return selected.unionByName(pick)
+
+    selected = iterate(first, pick_next, MMR_K - 1, cut_every=1)
     return selected.select(
         "q_id",
         "pick_rank",

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from data_warehouse_data_mining_spark.catalog import load
 from data_warehouse_data_mining_spark.functions import texthash as th
+from data_warehouse_data_mining_spark.operators.iterate import iterate
 from data_warehouse_data_mining_spark.registry import register
 
 STOPWORDS = ("the", "a")
@@ -2674,8 +2675,7 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     1e12 fixed-point units, per-edge contribution floor(rank*w/W_u)
     via integer division, damping as (85*x)//100 — so every iteration
     is bit-identical in both engines (DuckDB materialized-CTE unroll
-    mirrors the Spark loop; Spark localCheckpoints each step to
-    truncate lineage).
+    mirrors the Spark loop, whose lineage is cut every superstep).
 
     Scale: the node set is the corpus VOCABULARY and the edge set the
     distinct adjacent-word pairs — both saturate far below corpus
@@ -2709,9 +2709,9 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     wd = e.groupBy(F.col("src").alias("w")).agg(
         F.sum("cnt").cast("long").alias("wdeg")
     ).localCheckpoint(eager=True)
-    ranks = wd.select("w", F.lit(TR_UNIT).cast("long").alias("rank"))
     base = 15 * TR_UNIT // 100
-    for _ in range(TR_ITERS):
+
+    def superstep(ranks: DataFrame, _: int) -> DataFrame:
         contrib = (
             ranks.join(wd, "w")
             .join(e, F.col("w") == F.col("src"))
@@ -2720,18 +2720,18 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("(rank * cnt) div wdeg").alias("c"),
             )
         )
-        ranks = (
-            contrib.groupBy(F.col("dst").alias("w"))
-            .agg(
-                (
-                    F.lit(base)
-                    + F.expr("(85 * CAST(sum(c) AS BIGINT)) div 100")
-                )
-                .cast("long")
-                .alias("rank")
-            )
-            .localCheckpoint(eager=True)
+        return contrib.groupBy(F.col("dst").alias("w")).agg(
+            (F.lit(base) + F.expr("(85 * CAST(sum(c) AS BIGINT)) div 100"))
+            .cast("long")
+            .alias("rank")
         )
+
+    ranks = iterate(
+        wd.select("w", F.lit(TR_UNIT).cast("long").alias("rank")),
+        superstep,
+        TR_ITERS,
+        cut_every=1,
+    )
     return (
         ranks.select(
             F.col("w").alias("word"),

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_warehouse_data_mining_spark.catalog import load
+from data_warehouse_data_mining_spark.operators.iterate import iterate
 from data_warehouse_data_mining_spark.registry import register
 
 
@@ -128,6 +129,29 @@ _MARKOV_ORACLE = (
 )
 
 
+def _power_iteration(trans: DataFrame) -> DataFrame:
+    """``(state, prob)`` after _MARKOV_ITERS power-iteration supersteps
+    over a transition table ``(prev_type, next_type, p)``, from the
+    uniform start vector over its source states. Each superstep is one
+    join + aggregate on the k×k matrix (k = #event types); the k-row
+    vector's lineage is cut every 4 supersteps. No broadcast hint: AQE
+    broadcasts the vector from its runtime size, and a forced hint
+    measured slower (sf0.01, 4 cores: stationary median 2.18 vs
+    1.73 s, entropy rate 3.56 vs 2.14 s)."""
+    states = trans.select(F.col("prev_type").alias("state")).distinct()
+    n_states = states.count()
+    rank = states.withColumn("prob", F.lit(1.0 / n_states))
+
+    def superstep(rank: DataFrame, _: int) -> DataFrame:
+        return (
+            trans.join(rank, F.col("prev_type") == F.col("state"))
+            .groupBy(F.col("next_type").alias("state"))
+            .agg(F.sum(F.col("p") * F.col("prob")).alias("prob"))
+        )
+
+    return iterate(rank, superstep, _MARKOV_ITERS, cut_every=4)
+
+
 @register("markov_stationary_distribution", oracle=_MARKOV_ORACLE)
 def markov_stationary_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative DataFrame algorithm: power iteration on the event-type
@@ -135,10 +159,9 @@ def markov_stationary_distribution(spark: SparkSession, sf_dir: str) -> DataFram
     distribution of the user-behavior Markov chain. The DuckDB oracle
     unrolls the same 12 iterations as chained CTEs.
 
-    Each iteration is one broadcast join + aggregate on a k×k matrix
-    (k = #event types) — driver only orchestrates; at 100 TB the
-    transition matrix is still tiny, the expensive part (bigram
-    extraction) runs once."""
+    The supersteps are ``_power_iteration`` on a k×k matrix (k = #event
+    types) — driver only orchestrates; at 100 TB the transition matrix
+    is still tiny, the expensive part (bigram extraction) runs once."""
     from data_warehouse_data_mining_spark.operators.mining import (
         event_sequence_bigrams,
     )
@@ -155,24 +178,9 @@ def markov_stationary_distribution(spark: SparkSession, sf_dir: str) -> DataFram
     ).localCheckpoint(eager=True)  # truncate the bigram lineage so each
     # of the 12 iteration plans is a join over a leaf, not a replay of
     # the extraction pipeline; blocks are GC-released after the query
-
-    states = trans.select(F.col("prev_type").alias("state")).distinct()
-    n_states = states.count()
-    rank = states.withColumn("prob", F.lit(1.0 / n_states))
-
-    for it in range(_MARKOV_ITERS):
-        rank = (
-            trans.join(
-                F.broadcast(rank), F.col("prev_type") == F.col("state")
-            )
-            .groupBy(F.col("next_type").alias("state"))
-            .agg(F.sum(F.col("p") * F.col("prob")).alias("prob"))
-        )
-        if (it + 1) % 4 == 0:
-            # k-row vector — checkpoint is cheap, keeps lineage O(4)
-            rank = rank.localCheckpoint(eager=True)
-
-    return rank.select("state", F.round("prob", 6).alias("stationary_prob"))
+    return _power_iteration(trans).select(
+        "state", F.round("prob", 6).alias("stationary_prob")
+    )
 
 
 @register(
@@ -1081,18 +1089,7 @@ def markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "next_type",
         (F.col("n") * 1.0 / F.sum("n").over(wrow)).alias("p"),
     )
-    states = trans.select("prev_type").distinct()
-    n_states = states.count()
-    ranks = states.select(
-        F.col("prev_type").alias("state"),
-        F.lit(1.0 / n_states).alias("prob"),
-    )
-    for _ in range(_MARKOV_ITERS):
-        ranks = (
-            trans.join(ranks, F.col("prev_type") == F.col("state"))
-            .groupBy(F.col("next_type").alias("state"))
-            .agg(F.sum(F.col("p") * F.col("prob")).alias("prob"))
-        )
+    ranks = _power_iteration(trans)
     hrow = trans.groupBy(F.col("prev_type").alias("hstate")).agg(
         F.sum(
             F.when(

@@ -133,11 +133,7 @@ def _driver_history() -> tuple[frozenset[str], tuple[str, ...], frozenset[str]]:
         # r14 optimization touched these query paths (see
         # OPTIMIZATION_r14.md); same rule — driver row at or after the
         # round that changed the builder.
-        "graph_pagerank": 14,
         "ml_cv_grid_search": 14,
-        "graph_personalized_pagerank": 14,
-        "graph_kcore_peel": 14,
-        "graph_bfs_layers": 14,
         "markov_removal_attribution": 14,
         "bradley_terry_event_strengths": 14,
         "ucb1_bandit_replay": 14,
@@ -151,6 +147,26 @@ def _driver_history() -> tuple[frozenset[str], tuple[str, ...], frozenset[str]]:
         "ann_ivf_kmeans": 14,
         "pq_adc_search": 14,
         "embedding_pq_quantization": 14,
+        # r15: every superstep loop moved onto operators.iterate (lazy
+        # cuts, last superstep uncut) and graph.py's builders share one
+        # co-purchase edge helper
+        "graph_pagerank": 15,
+        "graph_personalized_pagerank": 15,
+        "graph_kcore_peel": 15,
+        "graph_bfs_layers": 15,
+        "graph_triangle_count": 15,
+        "graph_degree_distribution": 15,
+        "graph_label_propagation": 15,
+        "graph_modularity": 15,
+        "adamic_adar_link_prediction": 15,
+        "adamic_adar_capped": 15,
+        "markov_stationary_distribution": 15,
+        "markov_entropy_rate": 15,
+        "textrank_keywords": 15,
+        "mmr_diversified_topk": 15,
+        "retrieval_rerank_pipeline": 15,
+        "neardup_clusters": 15,
+        "dedup_keep_canonical": 15,
     }
     stale = tuple(
         sorted(

@@ -194,15 +194,35 @@ def test_runtime_bloom_filter_join(spark):
 
 
 def test_iterative_loops_checkpoint_truncates_lineage(spark):
-    """The iterative operators (PageRank, connected components) must
-    not accumulate one logical plan per iteration: localCheckpoint
-    truncates the lineage, so the FINAL plan is a handful of operators
-    over a checkpointed leaf, not a 10-join chain. r2's un-checkpointed
+    """The iterative operators must not accumulate one logical plan per
+    iteration: ``iterate`` truncates the lineage, so the FINAL plan is
+    at most one cut interval of supersteps over a checkpointed leaf,
+    not a chain of every superstep's joins (uncut: label propagation
+    10 joins, markov 12, textrank 16, MMR 12). r2's un-checkpointed
     plans audited at 309 / 4,788 codegen operators — this pins the fix."""
-    from data_warehouse_data_mining_spark.operators.graph import graph_pagerank
     from data_warehouse_data_mining_spark.operators.dedup import neardup_clusters
+    from data_warehouse_data_mining_spark.operators.graph import (
+        graph_label_propagation,
+        graph_modularity,
+        graph_pagerank,
+    )
+    from data_warehouse_data_mining_spark.operators.similarity import (
+        mmr_diversified_topk,
+    )
+    from data_warehouse_data_mining_spark.operators.text import textrank_keywords
+    from data_warehouse_data_mining_spark.operators.udfs import (
+        markov_stationary_distribution,
+    )
 
-    for builder, max_joins in [(graph_pagerank, 2), (neardup_clusters, 2)]:
+    for builder, max_joins in [
+        (graph_pagerank, 2),
+        (neardup_clusters, 2),
+        (graph_label_propagation, 2),  # last of 5 supersteps, cut every 2
+        (graph_modularity, 6),  # Q's own joins over the cut labels
+        (markov_stationary_distribution, 4),  # last 4 of 12
+        (textrank_keywords, 2),  # last superstep: 2 joins
+        (mmr_diversified_topk, 3),  # last pick: anti-join + 2 joins
+    ]:
         df = builder(spark, SF_SMALL)
         plan = df._jdf.queryExecution().analyzed().toString()
         n_joins = plan.count("Join ")
@@ -213,6 +233,40 @@ def test_iterative_loops_checkpoint_truncates_lineage(spark):
         assert "LogicalRDD" in plan or "ExistingRDD" in plan, (
             f"{builder.__name__}: no checkpointed leaf in plan"
         )
+
+
+def test_iterate_cuts_on_cadence_and_stops_early(spark):
+    """``iterate`` cuts lineage after supersteps cut_every,
+    2·cut_every, … but never after the last one, and ``until`` ends the
+    loop at the first superstep it holds for."""
+    from pyspark.sql import functions as F
+
+    from data_warehouse_data_mining_spark.operators.iterate import iterate
+
+    def is_cut(df):
+        return df._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD"
+
+    seen = []
+
+    def step(df, i):
+        seen.append((i, is_cut(df)))
+        return df.select((F.col("id") + 1).alias("id"))
+
+    out = iterate(spark.range(3), step, 6, cut_every=2)
+    # the inputs of supersteps 3 and 5 (i = 2, 4) are the cut outputs
+    # of supersteps 2 and 4; superstep 6's output is returned uncut
+    assert seen == [(0, False), (1, False), (2, True), (3, False),
+                    (4, True), (5, False)]
+    assert not is_cut(out)
+    assert sorted(r.id for r in out.collect()) == [6, 7, 8]
+
+    seen.clear()
+    out = iterate(
+        spark.range(1), step, 10, cut_every=1,
+        until=lambda old, new: new.first().id >= 3,
+    )
+    assert [i for i, _ in seen] == [0, 1, 2]
+    assert is_cut(out) and out.first().id == 3
 
 
 def test_bounded_model_recurrences_run_in_one_task(spark):
@@ -497,6 +551,95 @@ def test_no_pins_on_token_proportional_tables():
                 f"{path}:{hits} pins the shingle stream "
                 "(token-proportional; recompute it instead)"
             )
+
+
+def test_lineage_truncation_lives_in_iterate():
+    """Repo-wide AST lint: no `for`/`while` body in the package may call
+    `.localCheckpoint(` or `.checkpoint(` itself — a loop that truncates
+    lineage goes through `operators.iterate.iterate`, so the cadence,
+    the eager/lazy choice and the cluster swap to a reliable
+    `checkpoint()` stay in one module. A loop that pins something
+    WITHOUT carrying state between passes may be waived here by
+    (file, function) with its reason, so adding one is a reviewed diff."""
+    import ast
+    import os
+
+    import data_warehouse_data_mining_spark as pkg
+
+    waivers = {
+        ("quality.py", "candidate_key_profile"): (
+            "materializes one aggregate per table; no state is carried "
+            "between loop passes"
+        ),
+    }
+
+    def loop_cuts(tree):
+        """(lineno, enclosing function) of every truncating call inside
+        a for/while body (or its else branch)."""
+        hits = set()
+
+        def visit(node, fn, in_loop):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                fn = node.name
+            if (
+                in_loop
+                and isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("localCheckpoint", "checkpoint")
+            ):
+                hits.add((node.lineno, fn))
+            if isinstance(node, (ast.For, ast.AsyncFor, ast.While)):
+                head = node.test if isinstance(node, ast.While) else node.iter
+                visit(head, fn, in_loop)
+                for child in node.body + node.orelse:
+                    visit(child, fn, True)
+                return
+            for child in ast.iter_child_nodes(node):
+                visit(child, fn, in_loop)
+
+        visit(tree, None, False)
+        return sorted(hits)
+
+    # lint self-test (positive AND negative controls) so a refactor that
+    # silently stops it firing fails here, not as unbounded lineage
+    control = ast.parse(
+        "def hand_rolled(df):\n"
+        "    for i in range(3):\n"
+        "        df = step(df).localCheckpoint(eager=False)\n"  # 3: flag
+        "def while_loop(df):\n"
+        "    while more(df):\n"
+        "        if x:\n"
+        "            df = df.checkpoint()\n"  # 7: flag
+        "def after_loop_ok(df):\n"
+        "    for i in range(3):\n"
+        "        df = step(df)\n"
+        "    return df.localCheckpoint(eager=True)\n"  # after: no flag
+        "def one_shot_ok(df):\n"
+        "    return df.localCheckpoint(eager=True)\n"  # no loop: no flag
+    )
+    assert loop_cuts(control) == [(3, "hand_rolled"), (7, "while_loop")]
+
+    pkg_root = os.path.dirname(os.path.abspath(pkg.__file__))
+    problems, used = [], set()
+    for root, _dirs, files in os.walk(pkg_root):
+        for fname in files:
+            path = os.path.join(root, fname)
+            if not fname.endswith(".py") or path == os.path.join(
+                pkg_root, "operators", "iterate.py"
+            ):
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), filename=path)
+            for lineno, fn in loop_cuts(tree):
+                if (fname, fn) in waivers:
+                    used.add((fname, fn))
+                else:
+                    problems.append(f"{path}:{lineno} ({fn})")
+    assert not problems, (
+        "loop truncates lineage by hand (route it through "
+        f"operators.iterate.iterate): {problems}"
+    )
+    assert used == set(waivers), f"stale waiver(s): {set(waivers) - used}"
 
 
 def test_no_broadcast_hints_on_unbounded_tables():
