@@ -92,6 +92,28 @@ def _contribution_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _pagerank_superstep(
+    contrib: DataFrame, ranks: DataFrame, base_add: int
+) -> DataFrame:
+    """One integer PageRank superstep: join the ``(node, rank)`` vector
+    against the contribution table on src, floor-divide each rank by
+    its out-degree, and re-aggregate by dst with damping 0.85 plus the
+    scalar teleport share ``base_add``. Once materialized, the
+    contribution table reports its src partitioning, so the only
+    exchange is the one the dst aggregate needs; an unmaterialized
+    cache reports none and the edge side would re-exchange."""
+    return (
+        contrib.join(ranks, F.col("src") == F.col("node"))
+        .select("dst", F.expr("rank div d").alias("contrib"))
+        .groupBy("dst")
+        .agg(F.expr("85 * sum(contrib) div 100").alias("part_rank"))
+        .select(
+            F.col("dst").alias("node"),
+            (F.lit(base_add) + F.col("part_rank")).alias("rank"),
+        )
+    )
+
+
 def _pagerank_oracle() -> str:
     """Unroll the integer power iteration as chained CTEs (standard SQL
     forbids GROUP BY in a recursive term, so recursion can't express
@@ -170,21 +192,12 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("node", F.lit(r0).cast("long").alias("rank"))
     )
 
-    def superstep(ranks: DataFrame, _: int) -> DataFrame:
-        return (
-            contrib_edges.join(ranks, F.col("src") == F.col("node"))
-            .select(
-                "dst", F.expr("rank div d").alias("contrib")
-            )
-            .groupBy("dst")
-            .agg(F.expr("85 * sum(contrib) div 100").alias("part_rank"))
-            .select(
-                F.col("dst").alias("node"),
-                (F.lit(base_add) + F.col("part_rank")).alias("rank"),
-            )
-        )
-
-    ranks = iterate(ranks, superstep, N_ITER, cut_every=5)
+    ranks = iterate(
+        ranks,
+        lambda r, _: _pagerank_superstep(contrib_edges, r, base_add),
+        N_ITER,
+        cut_every=5,
+    )
     ranks = ranks.localCheckpoint(eager=True)
     # final ranks are materialized above, so the scan-side cache can go
     contrib_edges.unpersist()

@@ -5,7 +5,9 @@ iteration, greedy selection) grows its logical plan by one superstep
 per round; left alone, every action re-analyzes and re-optimizes the
 whole chain, so planning cost grows with the iteration count. Every
 such loop in the package runs through ``iterate``, which owns the
-truncation policy in one place.
+truncation policy in one place. State bounded by a literal domain
+(the markov power iteration, the Bradley-Terry and UCB1 recurrences)
+does not loop here at all: it runs in one applyInPandas task.
 
 Truncation is a LAZY ``localCheckpoint``: the plan is cut to a
 ``LogicalRDD`` leaf immediately, and the blocks materialize inside the

@@ -2880,6 +2880,11 @@ def ucb1_bandit_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-in-name-order ties — both are IEEE doubles with correctly
     rounded ops, proven by oracle hash equality at three SFs).
 
+    The one-row pivot is ONE ``selectExpr`` of 60
+    ``coalesce(max(CASE WHEN ...))`` aggregates, parsed in the JVM in one
+    call rather than built node by node over py4j (the simhash/texthash
+    precedent), so building the query stays cheap driver work.
+
     Scale shape: one fact scan -> 60-cell hash agg -> one-row pivot;
     the replay is O(arms x months) scalar work on that row."""
     e = load(spark, sf_dir).events
@@ -2895,16 +2900,10 @@ def ucb1_bandit_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # empty (day, arm) cells coalesce to 0 ppm, mirroring the oracle
     # (ADVICE r10: a NULL here nulls the entire replay downstream)
-    state = cells.agg(
+    state = cells.selectExpr(
         *[
-            F.coalesce(
-                F.max(
-                    F.when(
-                        (F.col("m") == t) & (F.col("a") == a), F.col("r_ppm")
-                    )
-                ),
-                F.lit(0).cast("long"),
-            ).alias(f"r{t}_{a}")
+            f"coalesce(max(CASE WHEN m = {t} AND a = '{a}' THEN r_ppm END),"
+            f" CAST(0 AS BIGINT)) AS r{t}_{a}"
             for t in range(1, UCB_MONTHS + 1)
             for a in UCB_ARMS
         ]

@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_warehouse_data_mining_spark.catalog import load
-from data_warehouse_data_mining_spark.operators.iterate import iterate
 from data_warehouse_data_mining_spark.registry import register
 
 
@@ -129,27 +128,43 @@ _MARKOV_ORACLE = (
 )
 
 
+def _markov_walk(pdf: pd.DataFrame) -> pd.DataFrame:
+    """The whole transition table in, the final vector out: see
+    ``_power_iteration``."""
+    rows = sorted(
+        zip(pdf["next_type"].tolist(), pdf["prev_type"].tolist(),
+            pdf["p"].tolist())
+    )
+    sources = set(pdf["prev_type"].tolist())
+    prob = {a: 1.0 / len(sources) for a in sources}
+    for _ in range(_MARKOV_ITERS):
+        nxt: dict[str, float] = {}
+        for b, a, p in rows:
+            if a in prob:
+                nxt[b] = nxt.get(b, 0.0) + p * prob[a]
+        prob = nxt
+    states = sorted(prob)
+    return pd.DataFrame({"state": states, "prob": [prob[s] for s in states]})
+
+
 def _power_iteration(trans: DataFrame) -> DataFrame:
     """``(state, prob)`` after _MARKOV_ITERS power-iteration supersteps
     over a transition table ``(prev_type, next_type, p)``, from the
-    uniform start vector over its source states. Each superstep is one
-    join + aggregate on the k×k matrix (k = #event types); the k-row
-    vector's lineage is cut every 4 supersteps. No broadcast hint: AQE
-    broadcasts the vector from its runtime size, and a forced hint
-    measured slower (sf0.01, 4 cores: stationary median 2.18 vs
-    1.73 s, entropy rate 3.56 vs 2.14 s)."""
-    states = trans.select(F.col("prev_type").alias("state")).distinct()
-    n_states = states.count()
-    rank = states.withColumn("prob", F.lit(1.0 / n_states))
+    uniform vector over its source states: ``prob'[b] = sum_a p[a,b] *
+    prob[a]`` in plain Python doubles.
 
-    def superstep(rank: DataFrame, _: int) -> DataFrame:
-        return (
-            trans.join(rank, F.col("prev_type") == F.col("state"))
-            .groupBy(F.col("next_type").alias("state"))
-            .agg(F.sum(F.col("p") * F.col("prob")).alias("prob"))
-        )
-
-    return iterate(rank, superstep, _MARKOV_ITERS, cut_every=4)
+    The state is bounded by the event-type domain (k×k cells), never by
+    the data, so all supersteps run inside ONE applyInPandas task
+    (``_markov_walk``) instead of one scheduled join round each. Each
+    target's terms are summed in sorted ``(next_type, prev_type)``
+    order, which no partitioning can change. Do not reassociate: the
+    6-dp oracle rounding is checked against exactly this sum order. An
+    empty table has no group and yields no rows, like the oracle."""
+    return (
+        trans.withColumn("g", F.lit(1))
+        .groupBy("g")
+        .applyInPandas(_markov_walk, "state string, prob double")
+    )
 
 
 @register("markov_stationary_distribution", oracle=_MARKOV_ORACLE)
@@ -159,25 +174,21 @@ def markov_stationary_distribution(spark: SparkSession, sf_dir: str) -> DataFram
     distribution of the user-behavior Markov chain. The DuckDB oracle
     unrolls the same 12 iterations as chained CTEs.
 
-    The supersteps are ``_power_iteration`` on a k×k matrix (k = #event
-    types) — driver only orchestrates; at 100 TB the transition matrix
-    is still tiny, the expensive part (bigram extraction) runs once."""
+    Building schedules no Spark job: the transition table is read once,
+    lazily, by the single-task walk in ``_power_iteration`` (sorted
+    summation order, do not reassociate). At 100 TB the bigram
+    extraction is the only data-sized work; the k×k walk is not."""
     from data_warehouse_data_mining_spark.operators.mining import (
         event_sequence_bigrams,
     )
 
     bigrams = event_sequence_bigrams(spark, sf_dir)
     totals = bigrams.groupBy("prev_type").agg(F.sum("n").alias("total"))
-    trans = (
-        bigrams.join(totals, "prev_type")
-        .select(
-            "prev_type",
-            "next_type",
-            (F.col("n") / F.col("total")).alias("p"),
-        )
-    ).localCheckpoint(eager=True)  # truncate the bigram lineage so each
-    # of the 12 iteration plans is a join over a leaf, not a replay of
-    # the extraction pipeline; blocks are GC-released after the query
+    trans = bigrams.join(totals, "prev_type").select(
+        "prev_type",
+        "next_type",
+        (F.col("n") / F.col("total")).alias("p"),
+    )
     return _power_iteration(trans).select(
         "state", F.round("prob", 6).alias("stationary_prob")
     )

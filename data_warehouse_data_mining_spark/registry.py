@@ -136,7 +136,6 @@ def _driver_history() -> tuple[frozenset[str], tuple[str, ...], frozenset[str]]:
         "ml_cv_grid_search": 14,
         "markov_removal_attribution": 14,
         "bradley_terry_event_strengths": 14,
-        "ucb1_bandit_replay": 14,
         "smote_rebalance_counts": 14,
         "ml_smote_then_train": 14,
         "simhash_fingerprints": 14,
@@ -150,7 +149,6 @@ def _driver_history() -> tuple[frozenset[str], tuple[str, ...], frozenset[str]]:
         # r15: every superstep loop moved onto operators.iterate (lazy
         # cuts, last superstep uncut) and graph.py's builders share one
         # co-purchase edge helper
-        "graph_pagerank": 15,
         "graph_personalized_pagerank": 15,
         "graph_kcore_peel": 15,
         "graph_bfs_layers": 15,
@@ -160,13 +158,16 @@ def _driver_history() -> tuple[frozenset[str], tuple[str, ...], frozenset[str]]:
         "graph_modularity": 15,
         "adamic_adar_link_prediction": 15,
         "adamic_adar_capped": 15,
-        "markov_stationary_distribution": 15,
-        "markov_entropy_rate": 15,
         "textrank_keywords": 15,
         "mmr_diversified_topk": 15,
         "retrieval_rerank_pipeline": 15,
         "neardup_clusters": 15,
         "dedup_keep_canonical": 15,
+        # r16: one-task markov walk, parsed ucb1 pivot, lifted pagerank step
+        "markov_stationary_distribution": 16,
+        "markov_entropy_rate": 16,
+        "ucb1_bandit_replay": 16,
+        "graph_pagerank": 16,
     }
     stale = tuple(
         sorted(

@@ -198,7 +198,7 @@ def test_iterative_loops_checkpoint_truncates_lineage(spark):
     iteration: ``iterate`` truncates the lineage, so the FINAL plan is
     at most one cut interval of supersteps over a checkpointed leaf,
     not a chain of every superstep's joins (uncut: label propagation
-    10 joins, markov 12, textrank 16, MMR 12). r2's un-checkpointed
+    10 joins, textrank 16, MMR 12). r2's un-checkpointed
     plans audited at 309 / 4,788 codegen operators — this pins the fix."""
     from data_warehouse_data_mining_spark.operators.dedup import neardup_clusters
     from data_warehouse_data_mining_spark.operators.graph import (
@@ -210,16 +210,12 @@ def test_iterative_loops_checkpoint_truncates_lineage(spark):
         mmr_diversified_topk,
     )
     from data_warehouse_data_mining_spark.operators.text import textrank_keywords
-    from data_warehouse_data_mining_spark.operators.udfs import (
-        markov_stationary_distribution,
-    )
 
     for builder, max_joins in [
         (graph_pagerank, 2),
         (neardup_clusters, 2),
         (graph_label_propagation, 2),  # last of 5 supersteps, cut every 2
         (graph_modularity, 6),  # Q's own joins over the cut labels
-        (markov_stationary_distribution, 4),  # last 4 of 12
         (textrank_keywords, 2),  # last superstep: 2 joins
         (mmr_diversified_topk, 3),  # last pick: anti-join + 2 joins
     ]:
@@ -270,14 +266,15 @@ def test_iterate_cuts_on_cadence_and_stops_early(spark):
 
 
 def test_bounded_model_recurrences_run_in_one_task(spark):
-    """r14 optimization pin: the three literal-bounded model
-    recurrences (markov value iteration, Bradley-Terry MM, UCB1
-    replay) execute INSIDE one applyInPandas task — a
-    FlatMapGroupsInPandas node in the plan — instead of one scheduled
-    join round per superstep (the elo_rating_replay discipline; each
-    paid seconds of pure stage latency on tables of dozens of rows).
-    Oracle equality with the unrolled-CTE DuckDB recurrences is pinned
-    separately by the sweep; this pins the execution shape."""
+    """The literal-bounded model recurrences (markov value iteration,
+    Bradley-Terry MM, UCB1 replay, and the markov power iteration
+    behind the stationary distribution and the entropy rate) execute
+    INSIDE one applyInPandas task — a FlatMapGroupsInPandas node in
+    the plan — instead of one scheduled join round per superstep (the
+    elo_rating_replay discipline; each paid seconds of pure stage
+    latency on tables of dozens of rows). Oracle equality with the
+    unrolled-CTE DuckDB recurrences is pinned separately by the sweep;
+    this pins the execution shape."""
     from data_warehouse_data_mining_spark.operators.mining_policy import (
         markov_removal_attribution,
         ucb1_bandit_replay,
@@ -285,17 +282,129 @@ def test_bounded_model_recurrences_run_in_one_task(spark):
     from data_warehouse_data_mining_spark.operators.mining_ratings import (
         bradley_terry_event_strengths,
     )
+    from data_warehouse_data_mining_spark.operators.udfs import (
+        markov_entropy_rate,
+        markov_stationary_distribution,
+    )
 
     for builder in (
         markov_removal_attribution,
         ucb1_bandit_replay,
         bradley_terry_event_strengths,
+        markov_stationary_distribution,
+        markov_entropy_rate,
     ):
         plan = explain.formatted_plan(builder(spark, SF_SMALL))
         assert "FlatMapGroupsInPandas" in plan, (
             f"{builder.__name__}: model recurrence no longer runs as a "
             "single applyInPandas task"
         )
+
+
+def test_bounded_state_builders_schedule_no_jobs(spark):
+    """Building a bounded-state iterative query runs no Spark job: the
+    markov walk and the ucb1 pivot are lazy plans, so every job they
+    cost is scheduled by the action that reads them. The catalog is
+    loaded first — the parquet schema read is the catalog's job, not
+    the builder's."""
+    from data_warehouse_data_mining_spark.catalog import load
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
+        ucb1_bandit_replay,
+    )
+    from data_warehouse_data_mining_spark.operators.udfs import (
+        markov_stationary_distribution,
+    )
+
+    load(spark, SF_SMALL).events
+    sc = spark.sparkContext
+    for builder in (markov_stationary_distribution, ucb1_bandit_replay):
+        group = f"{builder.__name__}:build"
+        sc.setJobGroup(group, group)
+        try:
+            builder(spark, SF_SMALL)
+            jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc._jsc.clearJobGroup()
+        assert jobs == [], f"{builder.__name__}: build ran jobs {jobs}"
+
+
+def _plan_nodes(node):
+    """Pre-order ``[(nodeName, node)]`` of a JVM physical plan subtree,
+    following ``children()`` only — a cached relation's own plan is not
+    a child of its InMemoryTableScan."""
+    out = [(node.nodeName(), node)]
+    kids = node.children()
+    for i in range(kids.size()):
+        out.extend(_plan_nodes(kids.apply(i)))
+    return out
+
+
+def _physical_nodes(df):
+    """``_plan_nodes`` of a DataFrame's physical plan; under AQE, of its
+    initial plan, which already holds every planned Exchange."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.initialPlan()
+    return _plan_nodes(plan)
+
+
+def test_pagerank_superstep_reads_partitioned_contribution_table(spark):
+    """One PageRank superstep reads the contribution table as it is
+    cached — pre-joined with the out-degrees, partitioned by src and
+    materialized before the loop, as graph_pagerank does — so the edge
+    side of the rank join is a bare InMemoryTableScan with no Exchange
+    above it, and the superstep adds exactly one shuffle: the
+    hashpartitioning(dst) of its re-aggregation. A superstep that
+    re-joins edges⋈deg, or a table that is not partitioned by src, puts
+    a join, an aggregate or an Exchange on the edge side. Broadcast is
+    off so the rank vector takes the shuffle-join path it takes at
+    scale."""
+    from pyspark.sql import functions as F
+
+    from data_warehouse_data_mining_spark.operators.graph import (
+        _contribution_table,
+        _pagerank_superstep,
+    )
+
+    def exchanges(df):
+        return [
+            n.outputPartitioning().toString()
+            for name, n in _physical_nodes(df)
+            if "Exchange" in name
+        ]
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    contrib = _contribution_table(spark, SF_SMALL)
+    try:
+        # built under the session's own config, as graph_pagerank does;
+        # a cache's partitioning is known once it is materialized
+        contrib.count()
+        spark.conf.set(key, "-1")
+        r0 = (
+            contrib.select(F.col("src").alias("node"))
+            .distinct()
+            .select("node", F.lit(1).cast("long").alias("rank"))
+        )
+        # a superstep's own output is the realistic input vector
+        ranks = _pagerank_superstep(contrib, r0, 0)
+        step = _pagerank_superstep(contrib, ranks, 0)
+
+        join = next(n for name, n in _physical_nodes(step) if "Join" in name)
+        edge_side = [name for name, _ in _plan_nodes(join.children().apply(0))]
+        assert edge_side.count("InMemoryTableScan") == 1, edge_side
+        assert not any(
+            "Exchange" in n or "Join" in n or "Aggregate" in n
+            for n in edge_side
+        ), f"edge side is not a bare cached scan: {edge_side}"
+
+        before, after = exchanges(ranks), exchanges(step)
+        assert len(after) == len(before) + 1, (before, after)
+        added = after[0]  # the root-most exchange is the new superstep's
+        assert added.startswith("hashpartitioning(dst"), added
+    finally:
+        contrib.unpersist()
+        spark.conf.set(key, saved)
 
 
 def test_smote_bucket_refinement_single_coding_pass(spark):

@@ -3323,6 +3323,33 @@ def test_markov_entropy_rate_bounds_and_replica(spark, duck):
     assert abs(rate - wsum) <= 1e-3
 
 
+def test_markov_power_iteration_empty_and_hand_computed(spark):
+    """An empty transition table yields no rows (the oracle's answer;
+    a uniform start of 1/0 used to raise ZeroDivisionError). On
+    A→B 1, B→B ½, B→C ½, C→C 1 from the uniform (⅓, ⅓, ⅓): A has no
+    in-edge and leaves the support after one superstep, B halves every
+    superstep after reaching ½, and C absorbs the rest, so after 12
+    supersteps prob = {B: 2⁻¹², C: 1 − 2⁻¹²}."""
+    from data_warehouse_data_mining_spark.operators.udfs import (
+        _MARKOV_ITERS,
+        _power_iteration,
+    )
+
+    schema = "prev_type string, next_type string, p double"
+    assert _power_iteration(spark.createDataFrame([], schema)).collect() == []
+
+    trans = spark.createDataFrame(
+        [("A", "B", 1.0), ("B", "B", 0.5), ("B", "C", 0.5), ("C", "C", 1.0)],
+        schema,
+    )
+    got = {r["state"]: r["prob"] for r in _power_iteration(trans).collect()}
+    assert _MARKOV_ITERS == 12
+    want = {"B": 2.0**-12, "C": 1 - 2.0**-12}
+    assert got.keys() == want.keys()
+    for s, v in want.items():
+        assert abs(got[s] - v) <= 1e-12, (s, got[s], v)
+
+
 def test_fisher_index_geometric_mean_and_bounds(spark, duck):
     """Fisher must be the geometric mean of Laspeyres and Paasche and
     lie between them; all three recomputed from an exact Python
