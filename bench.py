@@ -193,7 +193,7 @@ def main() -> None:
             # one untimed pass: the PQ/IVF codebook fit + Arrow UDF
             # warmup is a cached once-per-session artifact (the
             # FAISS-style train-once discipline — _fit_sample and
-            # _pq_codebooks memoize per (app, sf)), ~6 s of driver-side
+            # _pq_codebooks memoize per session), ~6 s of driver-side
             # numpy + py4j that would otherwise land entirely in the
             # first sample (BENCH_DETAIL r12 sample_spread 3.5). Serving
             # latency, not training cost, is what this query measures.

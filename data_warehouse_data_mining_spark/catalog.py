@@ -10,24 +10,27 @@ gets full predicate pushdown / column pruning / partition pruning. At
 100 TB the same code works against a partitioned table root; nothing
 here materializes or collects.
 
-SESSION SIDE EFFECT (deliberate, global): the first ``Catalog.table``
-call pins ``spark.sql.session.timeZone=UTC`` and
-``spark.sql.legacy.parquet.nanosAsLong=true`` on the session for the
-rest of its lifetime — timestamp display/arithmetic semantics change
-for an externally built SparkSession. This is the oracle contract (all
-results are compared against DuckDB's naive-UTC timestamps) and every
-operator in this package assumes it. The streaming path
-(``streaming.windows.read_event_stream``) applies the same pin itself
-so it does not depend on the batch catalog having run first.
+SESSION SIDE EFFECT (deliberate, global): ``pin_oracle_confs`` sets
+``spark.sql.session.timeZone=UTC`` and
+``spark.sql.legacy.parquet.nanosAsLong=true`` on the session. The first
+``Catalog.table`` call applies it once per session; timestamp
+display/arithmetic semantics change for an externally built
+SparkSession. This is the oracle contract (all results are compared
+against DuckDB's naive-UTC timestamps) and every operator in this
+package assumes it. The streaming path
+(``streaming.windows.read_event_stream``) calls the same pin itself so
+it does not depend on the batch catalog having run first.
 """
 
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from data_warehouse_data_mining_spark.session import memo
 
 TABLE_NAMES = [
     "region",
@@ -44,37 +47,17 @@ TABLE_NAMES = [
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Per-session memo of the LAZY table DataFrames, stored as a private
-# attribute ON the SparkSession wrapper, keyed by (sf_dir, table).
-# This is plan-handle reuse, not data caching: a DataFrame is an
-# unexecuted logical plan over the parquet files — nothing is
-# persisted, every action still computes from the files — but
-# constructing one costs a ~115 ms driver round-trip
-# (spark.read.parquet schema read + file listing, measured r13), paid
-# per table per query build before this memo. The memo must live with
-# the SESSION, not the applicationId: DataFrames carry their creating
-# session (temp views, session confs), and newSession() clones share
-# one appId — an appId-keyed memo handed a clone's DataFrame to the
-# parent session, which broke temp-view registration and ML binds in
-# the concurrent suite (measured r13). r14 (ADVICE r13): the r13
-# WeakKeyDictionary form leaked — its VALUES (DataFrames) strongly
-# reference their session, so each entry kept its own key alive for
-# the process lifetime; an attribute on the wrapper has exactly the
-# intended lifetime (dies with the session object) with no cycle
-# through the registry.
-#
-# Known, accepted semantics (ADVICE r13): the memoized DataFrame
-# freezes the parquet FILE LISTING captured at first read — within one
-# session, a fresh Catalog over the same sf_dir will not see files
-# added/replaced on disk (the pre-r13 code re-listed per Catalog).
-# Benchmark/test data is static; regenerate data in a new session.
-_MEMO_ATTR = "_spark_graft_table_memo"
-# Conf-pin flag, same attribute pattern. Pinned once per session: if
-# external code mutates spark.sql.session.timeZone AFTER the first
-# catalog use, later Catalogs inherit the drift (the pre-r13 code
-# re-pinned per Catalog). Nothing in-repo does this; the oracle
-# contract assumes the session stays UTC once pinned.
-_PINNED_ATTR = "_spark_graft_confs_pinned"
+
+def pin_oracle_confs(spark: SparkSession) -> None:
+    """Pin the oracle contract's confs on ``spark``. events.parquet has
+    carried INT64 TIMESTAMP(NANOS) in some testdata generations, which
+    Spark rejects unless nanosAsLong is on; the UTC pin matches DuckDB's
+    naive-UTC timestamps whatever the host session's timezone. Both
+    confs are runtime-settable and session-scoped, so an externally
+    built SparkSession (or a ``newSession()`` clone) gets them here
+    rather than from session.py."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
 @dataclass
@@ -83,43 +66,32 @@ class Catalog:
 
     spark: SparkSession
     sf_dir: str
-    _cache: dict[str, DataFrame] = field(default_factory=dict)
 
     def table(self, name: str) -> DataFrame:
+        """The table's DataFrame, built once per session.
+
+        This reuses plan handles, not data: the DataFrame is an
+        unexecuted plan over the parquet files and every action still
+        reads them, but building one costs a schema read plus a file
+        listing. Handles are keyed by session because a DataFrame
+        carries the session that built it (temp views, confs).
+
+        The confs are pinned once per session: if external code changes
+        ``spark.sql.session.timeZone`` after the first call, later
+        Catalogs inherit the drift. The handle also freezes the parquet
+        FILE LISTING taken at its first read, so within one session a
+        fresh Catalog over the same sf_dir does not see files added or
+        replaced on disk. Regenerate data in a new session."""
         if name not in TABLE_NAMES:
             raise KeyError(f"unknown table {name!r}; have {TABLE_NAMES}")
-        if name not in self._cache:
-            if not getattr(self.spark, _PINNED_ATTR, False):
-                # events.parquet has carried INT64 TIMESTAMP(NANOS) in
-                # some testdata generations; Spark rejects that unless
-                # nanosAsLong is on. Both confs are runtime-settable,
-                # and the catalog may be handed an externally built
-                # SparkSession that lacks them, so set them here rather
-                # than relying on session.py. The UTC pin also
-                # guarantees the oracle contract (timestamps compared
-                # against DuckDB's naive-UTC semantics) regardless of
-                # the host session's timezone. Pinned once per SESSION
-                # (confs are session-scoped; newSession() clones need
-                # their own pin).
-                self.spark.conf.set(
-                    "spark.sql.legacy.parquet.nanosAsLong", "true"
-                )
-                self.spark.conf.set("spark.sql.session.timeZone", "UTC")
-                setattr(self.spark, _PINNED_ATTR, True)
-            per_session = getattr(self.spark, _MEMO_ATTR, None)
-            if per_session is None:
-                per_session = {}
-                setattr(self.spark, _MEMO_ATTR, per_session)
-            key = (os.path.abspath(self.sf_dir), name)
-            if key not in per_session:
-                df = self.spark.read.parquet(
-                    os.path.join(self.sf_dir, f"{name}.parquet")
-                )
-                if name == "events":
-                    df = normalize_events(df)
-                per_session[key] = df
-            self._cache[name] = per_session[key]
-        return self._cache[name]
+        spark = self.spark
+        memo(spark, ("oracle_confs",), lambda: pin_oracle_confs(spark))
+
+        def read() -> DataFrame:
+            df = spark.read.parquet(os.path.join(self.sf_dir, f"{name}.parquet"))
+            return normalize_events(df) if name == "events" else df
+
+        return memo(spark, ("table", os.path.abspath(self.sf_dir), name), read)
 
     def __getattr__(self, name: str) -> DataFrame:
         if name in TABLE_NAMES:

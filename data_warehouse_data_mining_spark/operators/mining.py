@@ -2744,25 +2744,6 @@ def abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- compatibility re-exports (r11 split, VERDICT r10 #7) -------------
-# The single 8.5k-line mining.py is now three tier modules; existing
-# imports `from ...operators.mining import X` keep working via these.
-# Importing them here also guarantees their @register side effects run
-# whenever mining is imported. F401: re-export is the point.
-from data_warehouse_data_mining_spark.operators.mining_stats import *  # noqa: F401,F403,E402
-from data_warehouse_data_mining_spark.operators.mining_policy import *  # noqa: F401,F403,E402
-from data_warehouse_data_mining_spark.operators.mining_stats import (  # noqa: F401,E402
-    _HURST_LNW,
-    _POIS_CUM,
-)
-from data_warehouse_data_mining_spark.operators.mining_policy import (  # noqa: F401,E402
-    _UCB_LN,
-    _BRIER_FP,
-    _MTA_CHANNELS,
-    _MTA_W,
-)
-
-
 RMST_TAU_DAYS = 60  # restriction horizon
 
 

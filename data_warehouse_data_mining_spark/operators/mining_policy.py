@@ -3894,12 +3894,3 @@ def gumbel_block_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("mu") + F.col("alpha") * GUMBEL_C120) / 100, 2
         ).alias("ret_level_10y_dollars"),
     )
-
-
-# --- compatibility re-exports (r11 split) -----------------------------
-from data_warehouse_data_mining_spark.operators.mining_causal import *  # noqa: F401,F403,E402
-from data_warehouse_data_mining_spark.operators.mining_ratings import *  # noqa: F401,F403,E402
-from data_warehouse_data_mining_spark.operators.mining_ratings import (  # noqa: F401,E402
-    _ELO_TYPES,
-    _ELO_LN10,
-)

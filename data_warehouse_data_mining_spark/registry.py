@@ -117,7 +117,7 @@ def _driver_history() -> tuple[frozenset[str], tuple[str, ...], frozenset[str]]:
         # exact seeded confusion-cell pins; latest driver green is r6.
         "ml_logreg_confusion": 8,
         "ml_random_forest_report": 8,
-        # r13 optimization restructured these five queries (single
+        # r13 optimization restructured these queries (single
         # token/coding pass, window-count sizes, F.expr minhash, one
         # all-cells candidate table), but the capped sweep's
         # green-at-latest ordering rotated every one of them OUT of
@@ -127,9 +127,7 @@ def _driver_history() -> tuple[frozenset[str], tuple[str, ...], frozenset[str]]:
         # post-rewrite code.
         "dsir_importance_weights": 14,
         "prefix_filter_jaccard_pairs": 14,
-        "ivf_pq_search": 14,
         "dedup_minhash_lsh": 14,
-        "ivf_nprobe_recall_curve": 14,
         # r14 optimization touched these query paths (see
         # OPTIMIZATION_r14.md); same rule — driver row at or after the
         # round that changed the builder.
@@ -141,11 +139,6 @@ def _driver_history() -> tuple[frozenset[str], tuple[str, ...], frozenset[str]]:
         "simhash_fingerprints": 14,
         "simhash_hamming_stats": 14,
         "simhash128_hamming_stats": 14,
-        # shared _pq_code_udf marked non-deterministic (r14): the other
-        # three consumers beyond ivf_pq_search
-        "ann_ivf_kmeans": 14,
-        "pq_adc_search": 14,
-        "embedding_pq_quantization": 14,
         # r15: every superstep loop moved onto operators.iterate (lazy
         # cuts, last superstep uncut) and graph.py's builders share one
         # co-purchase edge helper
@@ -168,6 +161,14 @@ def _driver_history() -> tuple[frozenset[str], tuple[str, ...], frozenset[str]]:
         "markov_entropy_rate": 16,
         "ucb1_bandit_replay": 16,
         "graph_pagerank": 16,
+        # r17: yardstick, fit sample and codebooks memoized per session
+        "ann_ivf_kmeans": 17,
+        "ann_lsh_recall_exact": 17,
+        "embedding_pq_quantization": 17,
+        "ivf_nprobe_recall_curve": 17,
+        "ivf_pq_search": 17,
+        "ndcg_retrieval_eval": 17,
+        "pq_adc_search": 17,
     }
     stale = tuple(
         sorted(
@@ -277,6 +278,10 @@ def _ensure_loaded() -> None:
     from data_warehouse_data_mining_spark.streaming import stateful as stream_stateful  # noqa: F401
     from data_warehouse_data_mining_spark.operators import advanced  # noqa: F401
     from data_warehouse_data_mining_spark.operators import mining  # noqa: F401
+    from data_warehouse_data_mining_spark.operators import mining_stats  # noqa: F401
+    from data_warehouse_data_mining_spark.operators import mining_policy  # noqa: F401
+    from data_warehouse_data_mining_spark.operators import mining_causal  # noqa: F401
+    from data_warehouse_data_mining_spark.operators import mining_ratings  # noqa: F401
     from data_warehouse_data_mining_spark.operators import graph  # noqa: F401
     from data_warehouse_data_mining_spark.operators import sketches  # noqa: F401
     from data_warehouse_data_mining_spark.operators import quality  # noqa: F401

@@ -19,8 +19,12 @@ correct on local[N]:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Hashable
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -68,6 +72,19 @@ def get_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def memo(spark: SparkSession, key: Hashable, build: Callable[[], T]) -> T:
+    """Run ``build()`` once per (session, key) and return its result.
+
+    The one store for driver artifacts (table handles, conf pin, fit
+    samples, codebooks, yardsticks) lives in the session object's own
+    ``__dict__``: a stopped session takes its artifacts with it, and a
+    ``newSession()`` clone starts empty."""
+    store = spark.__dict__.setdefault("_spark_graft_memo", {})
+    if key not in store:
+        store[key] = build()
+    return store[key]
 
 
 def _parse_local_threads(master: str) -> int | None:

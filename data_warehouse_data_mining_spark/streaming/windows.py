@@ -165,15 +165,16 @@ def read_event_stream(
     streaming sources require a DIRECTORY; point it at an ingest drop
     folder in production) with ns→us normalization + watermark.
 
-    Pins the session to UTC + nanosAsLong itself (same guard as
-    ``Catalog.table``): normalize_events' NTZ→LTZ cast is only an
-    identity under a UTC session, and a session that uses only the
-    streaming path would otherwise depend on a batch-catalog side
-    effect having run first."""
-    from data_warehouse_data_mining_spark.catalog import normalize_events
+    Calls ``catalog.pin_oracle_confs`` itself on every call:
+    normalize_events' NTZ→LTZ cast is only an identity under a UTC
+    session, and a session that uses only the streaming path would
+    otherwise depend on a batch-catalog side effect having run first."""
+    from data_warehouse_data_mining_spark.catalog import (
+        normalize_events,
+        pin_oracle_confs,
+    )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_oracle_confs(spark)
     raw_schema = spark.read.parquet(source_dir).schema
     return normalize_events(
         spark.readStream.schema(raw_schema).parquet(source_dir)

@@ -751,6 +751,162 @@ def test_lineage_truncation_lives_in_iterate():
     assert used == set(waivers), f"stale waiver(s): {set(waivers) - used}"
 
 
+def test_no_module_level_caches():
+    """Repo-wide AST lint: no module-level dict, set or list may be
+    written by a function in its module (by subscript, or by
+    `.add/.append/.update/.setdefault`). Such a binding is a cache that
+    lives as long as the process and is never evicted when a session
+    stops; driver artifacts go through `session.memo`, whose one store
+    dies with its session. A waiver names (file, binding) with its
+    reason, so adding one is a reviewed diff."""
+    import ast
+    import os
+
+    import data_warehouse_data_mining_spark as pkg
+
+    waivers = {
+        ("registry.py", "_REGISTRY"): (
+            "the query registry: filled once per process by @register at "
+            "import, the same for every session"
+        ),
+    }
+    mutators = {"add", "append", "update", "setdefault"}
+    scopes = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+
+    def is_container(value):
+        if isinstance(
+            value,
+            (ast.Dict, ast.Set, ast.List, ast.DictComp, ast.SetComp, ast.ListComp),
+        ):
+            return True
+        return (
+            isinstance(value, ast.Call)
+            and isinstance(value.func, ast.Name)
+            and value.func.id in ("dict", "set", "list", "defaultdict")
+        )
+
+    def local_names(fn):
+        """Names fn binds itself (parameters and stores, nested scopes
+        excluded), minus those it declares global."""
+        args = fn.args
+        names = {
+            a.arg
+            for a in args.posonlyargs + args.args + args.kwonlyargs
+            + [args.vararg, args.kwarg]
+            if a is not None
+        }
+        declared = set()
+        todo = list(fn.body) if isinstance(fn.body, list) else [fn.body]
+        while todo:
+            node = todo.pop()
+            if isinstance(node, ast.Global):
+                declared.update(node.names)
+            elif isinstance(node, ast.Name) and isinstance(node.ctx, ast.Store):
+                names.add(node.id)
+            if isinstance(node, scopes + (ast.ClassDef,)):
+                if not isinstance(node, ast.Lambda):
+                    names.add(node.name)
+                continue
+            todo.extend(ast.iter_child_nodes(node))
+        return names - declared
+
+    def cache_writes(tree):
+        """(binding, lineno, enclosing function) of every write a
+        function makes to a module-level dict/set/list binding."""
+        module = set()
+        for node in tree.body:
+            if isinstance(node, ast.Assign) and is_container(node.value):
+                targets = node.targets
+            elif (
+                isinstance(node, ast.AnnAssign)
+                and node.value is not None
+                and is_container(node.value)
+            ):
+                targets = [node.target]
+            else:
+                continue
+            module.update(t.id for t in targets if isinstance(t, ast.Name))
+        hits = set()
+
+        def target(node):
+            if isinstance(node, ast.Subscript) and isinstance(
+                node.ctx, (ast.Store, ast.Del)
+            ):
+                return node.value
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in mutators
+            ):
+                return node.func.value
+            return None
+
+        def visit(node, fn, visible):
+            if isinstance(node, scopes):
+                fn = getattr(node, "name", "<lambda>")
+                visible = visible - local_names(node)
+            elif fn is not None:
+                t = target(node)
+                if isinstance(t, ast.Name) and t.id in visible:
+                    hits.add((t.id, node.lineno, fn))
+            for child in ast.iter_child_nodes(node):
+                visit(child, fn, visible)
+
+        visit(tree, None, module)
+        return sorted(hits, key=lambda h: h[1])
+
+    # lint self-test (positive AND negative controls) so a refactor that
+    # silently stops it firing fails here, not as a leaked cache
+    control = ast.parse(
+        "_CACHE = {}\n"
+        "_SEEN: set[str] = set()\n"
+        "_ORDER = []\n"
+        "_CONST = {'a': 1}\n"
+        "_SETUP = []\n"
+        "_SETUP.append(1)\n"  # 6: module-level fill, no flag
+        "def get(k):\n"
+        "    if k not in _CACHE:\n"
+        "        _CACHE[k] = k\n"  # 9: flag
+        "    return _CACHE[k]\n"
+        "def note(k):\n"
+        "    _SEEN.add(k)\n"  # 12: flag
+        "def shadowed(k, _SEEN):\n"
+        "    _ORDER = []\n"
+        "    _ORDER.append(k)\n"  # 15: local, no flag
+        "    _SEEN.add(k)\n"  # 16: parameter, no flag
+        "    return _CONST[k]\n"  # 17: read, no flag
+        "def outer():\n"
+        "    def inner(k):\n"
+        "        _ORDER.append(k)\n"  # 20: flag
+        "    return inner\n"
+    )
+    assert cache_writes(control) == [
+        ("_CACHE", 9, "get"),
+        ("_SEEN", 12, "note"),
+        ("_ORDER", 20, "inner"),
+    ]
+
+    pkg_root = os.path.dirname(os.path.abspath(pkg.__file__))
+    problems, used = [], set()
+    for root, _dirs, files in os.walk(pkg_root):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(root, fname)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), filename=path)
+            for name, lineno, fn in cache_writes(tree):
+                if (fname, name) in waivers:
+                    used.add((fname, name))
+                else:
+                    problems.append(f"{path}:{lineno} {name} ({fn})")
+    assert not problems, (
+        "module-level cache (memoize through session.memo instead): "
+        f"{problems}"
+    )
+    assert used == set(waivers), f"stale waiver(s): {set(waivers) - used}"
+
+
 def test_no_broadcast_hints_on_unbounded_tables():
     """Repo-wide AST lint (r10, VERDICT r9 #1): F.broadcast() must never
     be applied to a frame derived from an SF-proportional table —

@@ -298,7 +298,7 @@ def test_welch_ttest_matches_independent_computation(spark, duck):
     classical [min(n)-1, n_a+n_b-2] Welch-Satterthwaite envelope."""
     import math
 
-    from data_warehouse_data_mining_spark.operators.mining import ab_welch_ttest
+    from data_warehouse_data_mining_spark.operators.mining_stats import ab_welch_ttest
     from .conftest import SF_SMALL
 
     row = ab_welch_ttest(spark, SF_SMALL).collect()[0]
@@ -366,7 +366,7 @@ def test_mutual_information_matches_python_mirror(spark, duck):
 def test_qte_quartiles_monotone_and_match_duckdb(spark, duck):
     """Each arm's quartiles are nondecreasing in p, and the p=0.5 row
     equals DuckDB's percentile_cont medians computed directly."""
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_stats import (
         quantile_treatment_effects,
     )
     from .conftest import SF_SMALL
@@ -395,7 +395,7 @@ def test_poisson_bootstrap_ci_brackets_mean_and_weights_are_poisson(spark):
     """The ~94% min/max replicate envelope brackets the point estimate
     on this corpus, and the deterministic md5-driven weights average ~1
     (Poisson(1) mean)."""
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_stats import (
         poisson_bootstrap_ci,
     )
     from .conftest import SF_SMALL
@@ -413,7 +413,7 @@ def test_hill_tail_index_matches_python_mirror(spark, duck):
     never a global sort."""
     import math
 
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_stats import (
         HILL_K,
         hill_tail_index,
     )
@@ -469,7 +469,7 @@ def test_mann_whitney_matches_python_mirror(spark, duck):
     midrank formulas in Python must agree, and U_A + U_B == n_a*n_b."""
     import math
 
-    from data_warehouse_data_mining_spark.operators.mining import mann_whitney_u
+    from data_warehouse_data_mining_spark.operators.mining_stats import mann_whitney_u
     from .conftest import SF_SMALL
 
     row = mann_whitney_u(spark, SF_SMALL).collect()[0]
@@ -501,7 +501,7 @@ def test_mann_whitney_matches_python_mirror(spark, duck):
 def test_ks_two_sample_matches_python_mirror(spark, duck):
     """KS D recomputed from raw ECDFs in Python must agree exactly and
     obey 0 <= D <= 1; the attained value must realize the max gap."""
-    from data_warehouse_data_mining_spark.operators.mining import ks_two_sample
+    from data_warehouse_data_mining_spark.operators.mining_stats import ks_two_sample
     from .conftest import SF_SMALL
 
     row = ks_two_sample(spark, SF_SMALL).collect()[0]
@@ -522,7 +522,7 @@ def test_ks_two_sample_matches_python_mirror(spark, duck):
 def test_theil_sen_matches_python_mirror(spark, duck):
     """Per-nation lower-median pairwise slope recomputed in Python from
     DuckDB's exact daily cent totals must agree for every nation."""
-    from data_warehouse_data_mining_spark.operators.mining import theil_sen_trend
+    from data_warehouse_data_mining_spark.operators.mining_stats import theil_sen_trend
     from .conftest import SF_SMALL
 
     rows = {r["nation"]: r for r in theil_sen_trend(spark, SF_SMALL).collect()}
@@ -585,7 +585,7 @@ def test_conformal_coverage_guarantee(spark):
     smallest calibration residual as the radius, calibration coverage
     is >= 90% (integer inequality) for EVERY nation — by construction,
     so a single violation means the order statistic is miscomputed."""
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_stats import (
         conformal_interval_calibration,
     )
     from .conftest import SF_SMALL
@@ -624,7 +624,9 @@ def test_binseg_changepoint_matches_python_mirror(spark, duck):
     """The argmax split recomputed in Python over DuckDB's exact daily
     counts must agree (same f(t)=SL²/nL+SR²/nR objective, earlier-day
     tie-break), and SSE reduction must be nonnegative."""
-    from data_warehouse_data_mining_spark.operators.mining import binseg_changepoint
+    from data_warehouse_data_mining_spark.operators.mining_stats import (
+        binseg_changepoint,
+    )
     from .conftest import SF_SMALL
 
     row = binseg_changepoint(spark, SF_SMALL).collect()[0]
@@ -649,7 +651,7 @@ def test_newsvendor_qstar_is_cost_optimal(spark, duck):
     """q* must beat (or tie) BOTH every other empirical demand level
     and the naive round-the-mean policy on exact empirical cost —
     the defining optimality of the critical-ratio quantile."""
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_stats import (
         NV_CO,
         NV_CU,
         newsvendor_order_quantity,
@@ -684,7 +686,7 @@ def test_diff_in_diff_identity_and_mirror(spark, duck):
     exact per-user cent panel."""
     import math
 
-    from data_warehouse_data_mining_spark.operators.mining import diff_in_diff
+    from data_warehouse_data_mining_spark.operators.mining_stats import diff_in_diff
     from .conftest import SF_SMALL
 
     row = diff_in_diff(spark, SF_SMALL).collect()[0]
@@ -722,7 +724,9 @@ def test_kendall_tau_matches_python_mirror(spark, duck):
     accounting (c + d + ties <= n_pairs)."""
     import math
 
-    from data_warehouse_data_mining_spark.operators.mining import kendall_tau_daily
+    from data_warehouse_data_mining_spark.operators.mining_stats import (
+        kendall_tau_daily,
+    )
     from .conftest import SF_SMALL
 
     row = kendall_tau_daily(spark, SF_SMALL).collect()[0]
@@ -757,7 +761,7 @@ def test_kendall_tau_matches_python_mirror(spark, duck):
 def test_durbin_watson_in_valid_range(spark):
     """DW always lies in [0, 4]; on revenue data with a fitted trend it
     should sit in the interior (not exactly 0 or 4)."""
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_stats import (
         durbin_watson_residuals,
     )
     from .conftest import SF_SMALL
@@ -771,7 +775,7 @@ def test_lorenz_curve_convexity_and_terminal(spark):
     """Lorenz invariants: shares strictly ordered and convex (decile
     increments nondecreasing — poorer deciles add less), final share
     exactly 1.0, customer counts partition into near-equal deciles."""
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_stats import (
         lorenz_curve_deciles,
     )
     from .conftest import SF_SMALL
@@ -816,7 +820,7 @@ def test_hurst_exponent_plausible_and_mirrored(spark, duck):
     must agree exactly; H of a real-ish daily series lies in (0, 1)."""
     import math
 
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_stats import (
         HURST_WINDOWS,
         _HURST_LNW,
         hurst_rescaled_range,
@@ -866,7 +870,7 @@ def test_hurst_exponent_plausible_and_mirrored(spark, duck):
 def test_shapley_mta_efficiency_axiom(spark, duck):
     """Sum of channel Shapley values (in exact 24ths) must equal
     24 * (v(N) - v(empty)): total conversions attributable to touches."""
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         shapley_touch_attribution,
     )
     from .conftest import SF_SMALL
@@ -904,7 +908,7 @@ def test_markov_removal_monotone_and_bounded(spark):
     """Removing a channel can only LOWER absorption into conversion
     (edges redirect to null), so every removal effect is in [0, 1];
     base conversion probability is shared across rows and in (0, 1]."""
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         markov_removal_attribution,
     )
     from .conftest import SF_SMALL
@@ -924,7 +928,9 @@ def test_qini_endpoint_is_overall_uplift(spark, duck):
     """The curve's final point must equal the full-population uplift
     conv_T - conv_C * N_T/N_C, and cumulative counts must partition
     all users."""
-    from data_warehouse_data_mining_spark.operators.mining import qini_uplift_curve
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
+        qini_uplift_curve,
+    )
     from .conftest import SF_SMALL
 
     rows = qini_uplift_curve(spark, SF_SMALL).collect()
@@ -990,9 +996,9 @@ def test_nelson_aalen_dominates_km(spark):
     """Fleming-Harrington survival exp(-H) >= Kaplan-Meier at every
     lifetime (e^-x >= 1-x per term), H is nondecreasing, and both
     estimators share the identical risk-set table."""
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining import survival_km_curve
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         nelson_aalen_hazard,
-        survival_km_curve,
     )
     from .conftest import SF_SMALL
 
@@ -1011,7 +1017,7 @@ def test_nelson_aalen_dominates_km(spark):
 def test_mcnemar_cells_partition_users(spark, duck):
     """The four contingency cells must partition all users, and the
     continuity-corrected statistic never exceeds the raw chi2."""
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         mcnemar_paired_conversion,
     )
     from .conftest import SF_SMALL
@@ -1049,7 +1055,7 @@ def test_woe_iv_identities(spark):
     """IV must equal the sum of per-segment contributions, every
     contribution is nonnegative (dpct and WoE share sign), and the
     shared iv_total is identical on every row."""
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         woe_information_value,
     )
     from .conftest import SF_SMALL
@@ -1067,7 +1073,7 @@ def test_woe_iv_identities(spark):
 def test_mix_rate_decomposition_identity(spark, duck):
     """The decomposition must be exact: sum(mix + rate) equals the
     actual change in overall mean order value between the two years."""
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         mix_rate_decomposition,
     )
     from .conftest import SF_SMALL
@@ -1098,7 +1104,7 @@ def test_brown_forsythe_matches_python_mirror(spark, duck):
     """The F statistic recomputed in Python from the exact half-cent
     deviations (textbook two-group ANOVA on |x - median|) must agree,
     and F must be nonnegative."""
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         brown_forsythe_variance,
     )
     from .conftest import SF_SMALL
@@ -1134,7 +1140,7 @@ def test_brown_forsythe_matches_python_mirror(spark, duck):
 def test_cooks_distance_properties(spark):
     """Top-10 Cook's distances are nonnegative, sorted descending with
     day tie-breaks, and every leverage lies in (0, 1)."""
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         cooks_distance_trend,
     )
     from .conftest import SF_SMALL
@@ -1151,7 +1157,7 @@ def test_cooks_distance_properties(spark):
 def test_weekday_seasonality_r2_bounds(spark):
     """ANOVA R² lies in [0, 1] by construction; total variance > 0 on
     real data; exactly 7 weekday groups."""
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         weekday_seasonality_strength,
     )
     from .conftest import SF_SMALL
@@ -1168,7 +1174,7 @@ def test_mann_kendall_consistency(spark):
     columns (continuity correction folded in)."""
     import math
 
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         mann_kendall_trend,
     )
     from .conftest import SF_SMALL
@@ -1192,7 +1198,7 @@ def test_page_hinkley_invariants(spark):
     """PH_t is nonnegative, alarms agree with the λ comparison, and the
     running-min identity holds when replayed in Python over the emitted
     m_micro walk."""
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         PH_LAMBDA_MICRO,
         page_hinkley_drift,
     )
@@ -1304,7 +1310,7 @@ def test_isotonic_calibration_pav_properties(spark):
     """The minimax fit is monotone non-decreasing, stays inside the raw
     rate range, preserves the weighted mean (the PAV invariant), and
     matches a sequential pool-adjacent-violators replay in Python."""
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         isotonic_calibration,
     )
     from .conftest import SF_SMALL
@@ -1367,7 +1373,7 @@ def test_ips_policy_eval_invariants(spark):
     from pyspark.sql import functions as F
 
     from data_warehouse_data_mining_spark.catalog import load
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         ips_offline_policy_eval,
     )
     from .conftest import SF_SMALL
@@ -1415,7 +1421,7 @@ def test_brier_murphy_identity(spark):
     """Brier = REL - RES + UNC holds to fixed-point truncation, every
     component is in its valid range, and shrinkage makes reliability
     strictly positive."""
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         brier_decomposition,
     )
     from .conftest import SF_SMALL
@@ -1434,7 +1440,7 @@ def test_stratified_att_sums_and_confounding(spark):
     """ATT contributions are weight x diff per stratum, weights sum to
     1, and the adjusted ATT differs from the naive pooled difference
     (the confounder is real in this panel)."""
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         stratified_att_adjustment,
     )
     from .conftest import SF_MEDIUM
@@ -1482,7 +1488,7 @@ def test_dr_policy_eval_crossfit_replay(spark):
     from pyspark.sql import functions as F
 
     from data_warehouse_data_mining_spark.catalog import load
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         dr_policy_eval_crossfit,
     )
     from .conftest import SF_SMALL
@@ -1542,7 +1548,7 @@ def test_bh_fdr_stepup_properties(spark):
     """BH structure: the threshold ladder strictly decreases with
     rank, the rejection set is exactly the prefix 1..k_max, and k_max
     replays correctly from the emitted (abs_z, threshold) pairs."""
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         BH_Z_LADDER,
         bh_fdr_nation_tests,
     )
@@ -1571,7 +1577,7 @@ def test_msprt_always_valid_properties(spark):
     literal."""
     import math
 
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         MSPRT_LN_INV_ALPHA_MICRO,
         msprt_always_valid_monitor,
     )
@@ -1603,7 +1609,7 @@ def test_power_analysis_scaling_laws(spark):
     emitted mean/sigma."""
     import math
 
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         PWR_Z_SUM,
         sample_size_power_analysis,
     )
@@ -1830,7 +1836,7 @@ def test_ucb1_replay_matches_python(spark):
     from pyspark.sql import functions as F
 
     from data_warehouse_data_mining_spark.catalog import load
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         _UCB_LN,
         UCB_ARMS,
         UCB_MONTHS,
@@ -1932,7 +1938,7 @@ def test_l_moments_hockey_stick_equals_direct(spark):
     from pyspark.sql import functions as F
 
     from data_warehouse_data_mining_spark.catalog import load
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         l_moments_order_values,
     )
     from .conftest import SF_SMALL
@@ -1970,7 +1976,7 @@ def test_haar_energy_parseval_and_replay(spark):
     from pyspark.sql import functions as F
 
     from data_warehouse_data_mining_spark.catalog import load
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         HAAR_LEVELS,
         HAAR_N,
         haar_wavelet_energy,
@@ -2119,7 +2125,7 @@ def test_rerandomization_p_replay(spark):
     from pyspark.sql import functions as F
 
     from data_warehouse_data_mining_spark.catalog import load
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         RERAND_REPS,
         rerandomization_test_ab,
     )
@@ -2169,7 +2175,7 @@ def test_theil_decomposition_identity(spark):
     from pyspark.sql import functions as F
 
     from data_warehouse_data_mining_spark.catalog import load
-    from data_warehouse_data_mining_spark.operators.mining import (
+    from data_warehouse_data_mining_spark.operators.mining_policy import (
         theil_index_decomposition,
     )
     from .conftest import SF_SMALL
@@ -2423,7 +2429,7 @@ def test_rdd_placebo_and_ols_parity(spark, duck):
     arbitrary $5k cutoff must be a PLACEBO: non-significant at 95%.
     The left-side intercept/slope must match an independent numpy-free
     OLS on the same rows pulled through DuckDB."""
-    from data_warehouse_data_mining_spark.operators.mining_policy import (
+    from data_warehouse_data_mining_spark.operators.mining_causal import (
         RDD_BANDWIDTH_CENTS,
         RDD_CUTOFF_CENTS,
         regression_discontinuity_effect,
@@ -2468,9 +2474,7 @@ def test_psm_match_is_true_nearest_control(spark, duck):
     control computed in Python from the same panel (with the <=
     prev-on-tie rule), and the registered aggregates must equal the
     brute-force ATT."""
-    from data_warehouse_data_mining_spark.operators.mining_policy import (
-        psm_att_matched,
-    )
+    from data_warehouse_data_mining_spark.operators.mining_causal import psm_att_matched
 
     from .conftest import SF_SMALL
 
@@ -2578,7 +2582,7 @@ def test_mantel_haenszel_matches_python_cells(spark, duck):
     """OR_MH and the CMH statistic recomputed in Python from the exact
     per-nation 2x2 cells must match the registered output (to the
     1e-6 fixed-point floor)."""
-    from data_warehouse_data_mining_spark.operators.mining_policy import (
+    from data_warehouse_data_mining_spark.operators.mining_causal import (
         mantel_haenszel_odds,
     )
 
@@ -2954,7 +2958,7 @@ def test_bradley_terry_fixed_point_and_mass(spark, duck):
     """Strengths must sum to ~1 (integer-floor slack), be positive, and
     approximately satisfy the BT stationarity condition
     W_i = p_i * sum_j n_ij/(p_i + p_j) after the 8 MM iterations."""
-    from data_warehouse_data_mining_spark.operators.mining_policy import (
+    from data_warehouse_data_mining_spark.operators.mining_ratings import (
         bradley_terry_event_strengths,
     )
 
@@ -2995,7 +2999,7 @@ def test_elo_replay_python_replica_and_conservation(spark, duck):
     the integer K-updates) — final ratings must match exactly; the
     rating exchange is zero-sum up to one floor unit per duel; and the
     clearly-weakest arm agrees with Bradley-Terry's bottom rank."""
-    from data_warehouse_data_mining_spark.operators.mining_policy import (
+    from data_warehouse_data_mining_spark.operators.mining_ratings import (
         ELO_K_MILLI,
         ELO_START_MILLI,
         _ELO_TYPES,

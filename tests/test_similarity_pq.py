@@ -271,11 +271,12 @@ def test_fit_sample_floor_falls_back_to_bounded_limit(spark, monkeypatch):
     sample must fall back to the unfiltered deterministic
     limit(PQ_FIT_CAP) ordered by vec_id — never hand _lloyd_pp an
     empty/tiny stochastic sample. Forced here by shrinking the cap so
-    the threshold filter yields ~cap << floor rows."""
+    the threshold filter yields ~cap << floor rows. A fresh
+    newSession() starts with an empty memo, so the shrunken-cap sample
+    neither reuses nor replaces the shared session's."""
     cap = 8
     monkeypatch.setattr(S, "PQ_FIT_CAP", cap)
-    monkeypatch.setattr(S, "_FIT_SAMPLE_CACHE", {})
-    x = S._fit_sample(spark, SF_SMALL)
+    x = S._fit_sample(spark.newSession(), SF_SMALL)
     assert x.shape[0] == cap  # the bounded fallback, not the hash sample
     want = np.array(
         [
@@ -292,12 +293,9 @@ def test_fit_sample_floor_falls_back_to_bounded_limit(spark, monkeypatch):
         dtype=np.float64,
     )
     assert np.array_equal(x, want)
-    monkeypatch.setattr(S, "_FIT_SAMPLE_CACHE", {})
 
 
-def test_fit_sample_empty_embeddings_raises_cleanly(
-    spark, tmp_path, monkeypatch
-):
+def test_fit_sample_empty_embeddings_raises_cleanly(spark, tmp_path):
     """An EMPTY embeddings table must fail the codebook fit with a
     clear ValueError (r13 review), not crash inside the numpy
     k-means++ init (rng.randint(0)) or silently fit zero-row
@@ -321,7 +319,5 @@ def test_fit_sample_empty_embeddings_raises_cleanly(
     d = tmp_path / "empty_sf"
     d.mkdir()
     pq.write_table(empty, str(d / "embeddings.parquet"))
-    monkeypatch.setattr(S, "_FIT_SAMPLE_CACHE", {})
     with pytest.raises(ValueError, match="embeddings table is empty"):
-        S._fit_sample(spark, str(d))
-    monkeypatch.setattr(S, "_FIT_SAMPLE_CACHE", {})
+        S._fit_sample(spark.newSession(), str(d))

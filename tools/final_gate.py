@@ -82,6 +82,8 @@ def _pytest_fast():
             + "::test_no_broadcast_hints_on_unbounded_tables",
             os.path.join(REPO, "tests", "test_plans.py")
             + "::test_lineage_truncation_lives_in_iterate",
+            os.path.join(REPO, "tests", "test_plans.py")
+            + "::test_no_module_level_caches",
             "-p", "no:cacheprovider",
         ],
         capture_output=True, text=True, cwd=REPO,
