@@ -2,13 +2,23 @@
 
 Loads the TPC-H-ish star schema + events/documents/embeddings parquet
 tables (TESTDATA.md) and registers them as temp views. Parquet is
-self-describing so no inference pass is needed (unlike the reference's
-double-scanning ``inferSchema=True`` CSV reads, stroke_predict.py:22-23).
+self-describing, so the schema comes from the file's own footer
+(unlike the reference's double-scanning ``inferSchema=True`` CSV reads,
+stroke_predict.py:22-23). A bare ``spark.read.parquet`` still runs one
+Spark job per table to read that footer; ``read_parquet`` reads it on
+the driver instead, so opening a table schedules no job. Every parquet
+read in the package goes through ``read_parquet`` (lint-enforced).
 
-Scale notes: these are plain ``spark.read.parquet`` scans — Catalyst
-gets full predicate pushdown / column pruning / partition pruning. At
-100 TB the same code works against a partitioned table root; nothing
-here materializes or collects.
+Scale notes: these are plain parquet scans — Catalyst gets full
+predicate pushdown / column pruning / partition pruning. At 100 TB the
+same code works against a partitioned table root; nothing here
+materializes or collects.
+
+DRIVER I/O SIDE EFFECT: opening a table lists its root and reads ONE
+parquet footer (the first data file) on the driver, through the
+session's Hadoop conf, so remote table roots work as before. The
+footer is converted under the confs in force at that moment, which is
+why the pin below runs before the first read.
 
 SESSION SIDE EFFECT (deliberate, global): ``pin_oracle_confs`` sets
 ``spark.sql.session.timeZone=UTC`` and
@@ -24,11 +34,16 @@ it does not depend on the batch catalog having run first.
 
 from __future__ import annotations
 
+import json
 import os
+from collections.abc import Iterator
 from dataclasses import dataclass
+from types import SimpleNamespace
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from data_warehouse_data_mining_spark.session import memo
 
@@ -72,9 +87,10 @@ class Catalog:
 
         This reuses plan handles, not data: the DataFrame is an
         unexecuted plan over the parquet files and every action still
-        reads them, but building one costs a schema read plus a file
-        listing. Handles are keyed by session because a DataFrame
-        carries the session that built it (temp views, confs).
+        reads them, but building one costs a driver-side footer read
+        plus a file listing, no Spark job. Handles are keyed by session
+        because a DataFrame carries the session that built it (temp
+        views, confs).
 
         The confs are pinned once per session: if external code changes
         ``spark.sql.session.timeZone`` after the first call, later
@@ -88,7 +104,7 @@ class Catalog:
         memo(spark, ("oracle_confs",), lambda: pin_oracle_confs(spark))
 
         def read() -> DataFrame:
-            df = spark.read.parquet(os.path.join(self.sf_dir, f"{name}.parquet"))
+            df = read_parquet(spark, os.path.join(self.sf_dir, f"{name}.parquet"))
             return normalize_events(df) if name == "events" else df
 
         return memo(spark, ("table", os.path.abspath(self.sf_dir), name), read)
@@ -126,23 +142,91 @@ def load(spark: SparkSession, sf_dir: str | None = None) -> Catalog:
     return Catalog(spark, sf_dir or DEFAULT_SF_DIR)
 
 
-def table_rows(sf_dir: str, name: str) -> int:
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job.
+
+    Spark's inference schedules a job just to read one footer. Here the
+    driver reads the footer of the first data file itself and converts
+    it with the converter inference runs, under the session's SQLConf,
+    so nanosAsLong, TIMESTAMP_NTZ and Spark's own row-metadata schema
+    come out as they would from inference. Partition columns of a
+    hive-partitioned root are appended by the reader, as before. The
+    returned DataFrame, its plan and its rows are the inferred read's.
+    Like inference without ``mergeSchema``, it assumes every data file
+    under ``path`` carries the first one's schema."""
+    file, footer = next(_footers(spark, path), (None, None))
+    if footer is None:
+        raise FileNotFoundError(f"no parquet data file at {path}")
+    jvm = _parquet_jvm(spark)
+    converter = jvm.ParquetToSparkSchemaConverter(
+        spark._jsparkSession.sessionState().conf()  # type: ignore[attr-defined]
+    )
+    jschema = jvm.ParquetFileFormat.readSchemaFromFooter(
+        jvm.Footer(file, footer), converter
+    )
+    schema = StructType.fromJson(json.loads(jschema.json()))
+    return spark.read.schema(schema).parquet(path)
+
+
+def _parquet_jvm(spark: SparkSession) -> SimpleNamespace:
+    """The JVM classes the footer read calls, resolved once per session:
+    py4j resolves a dotted class name with one round trip per package
+    segment, which would otherwise cost more than the footer read."""
+
+    def build() -> SimpleNamespace:
+        jvm = spark._jvm  # type: ignore[attr-defined]
+        hadoop = jvm.org.apache.parquet.hadoop
+        sql = jvm.org.apache.spark.sql.execution.datasources.parquet
+        return SimpleNamespace(
+            Path=jvm.org.apache.hadoop.fs.Path,
+            ParquetFileReader=hadoop.ParquetFileReader,
+            Footer=hadoop.Footer,
+            ParquetToSparkSchemaConverter=sql.ParquetToSparkSchemaConverter,
+            ParquetFileFormat=sql.ParquetFileFormat,
+        )
+
+    return memo(spark, ("parquet_jvm",), build)
+
+
+def _footers(spark: SparkSession, path: str) -> Iterator[tuple[Any, Any]]:
+    """Yield (Hadoop Path, parquet-mr footer) of every data file under
+    ``path`` — a file, a directory or a glob — lazily, in name order.
+    Listing goes through Hadoop's FileSystem with the session's Hadoop
+    conf, and hides what Spark's file index hides: names starting with
+    ``.`` or ``_`` (``_SUCCESS``, ``.crc``, ``_temporary``) unless the
+    name is a ``k=v`` partition."""
+    jvm = _parquet_jvm(spark)
+    state = spark._jsparkSession.sessionState()  # type: ignore[attr-defined]
+    conf = state.newHadoopConf()
+    root = jvm.Path(path)
+    fs = root.getFileSystem(conf)
+    stack = list(fs.globStatus(root) or [])[::-1]
+    while stack:
+        status = stack.pop()
+        file = status.getPath()
+        if not status.isDirectory():
+            yield file, jvm.ParquetFileReader.readFooter(conf, file)
+            continue
+        children = {c.getPath().getName(): c for c in fs.listStatus(file)}
+        stack.extend(
+            children[n]
+            for n in sorted(children, reverse=True)
+            if not (n.startswith(".") or (n.startswith("_") and "=" not in n))
+        )
+
+
+def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
     """Exact row count of one catalog table from parquet FOOTER metadata
     only — no Spark job, no data pages read. Used by operators that
     auto-size from the corpus count (simhash128 banding) so sizing does
     not cost an extra scan per invocation; on a real cluster the same
-    footers back the count, so this stays cheap at any scale. Handles
-    both a single file and a directory of part files."""
-    import pyarrow.parquet as pq
-
+    footers back the count, so this stays cheap at any scale. Sums the
+    row groups of every data file ``read_parquet`` would list."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; have {TABLE_NAMES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if f.endswith(".parquet"):
-                    total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-        return total
-    return pq.ParquetFile(path).metadata.num_rows
+    return sum(
+        block.getRowCount()
+        for _file, footer in _footers(spark, path)
+        for block in footer.getBlocks()
+    )

@@ -1499,7 +1499,7 @@ def simhash128_hamming_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir).documents
     pairs = simhash128_hamming_pairs(
-        d, "doc_id", "text", n_docs=table_rows(sf_dir, "documents")
+        d, "doc_id", "text", n_docs=table_rows(spark, sf_dir, "documents")
     )
     return (
         pairs.groupBy("hamming")

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_warehouse_data_mining_spark.catalog import load
+from data_warehouse_data_mining_spark.catalog import load, read_parquet
 from data_warehouse_data_mining_spark.operators import dedup
 from data_warehouse_data_mining_spark.registry import register
 
@@ -78,7 +78,7 @@ def clean_corpus(
     exact_kept = good.join(keepers, id_col)
     if staging_dir is not None:
         exact_kept.write.mode("overwrite").parquet(staging_dir)
-        exact_kept = df.sparkSession.read.parquet(staging_dir)
+        exact_kept = read_parquet(df.sparkSession, staging_dir)
     else:
         exact_kept = exact_kept.localCheckpoint(eager=True)
 

@@ -138,7 +138,6 @@ def _driver_history() -> tuple[frozenset[str], tuple[str, ...], frozenset[str]]:
         "ml_smote_then_train": 14,
         "simhash_fingerprints": 14,
         "simhash_hamming_stats": 14,
-        "simhash128_hamming_stats": 14,
         # r15: every superstep loop moved onto operators.iterate (lazy
         # cuts, last superstep uncut) and graph.py's builders share one
         # co-purchase edge helper
@@ -169,6 +168,8 @@ def _driver_history() -> tuple[frozenset[str], tuple[str, ...], frozenset[str]]:
         "ivf_pq_search": 17,
         "ndcg_retrieval_eval": 17,
         "pq_adc_search": 17,
+        # r18: corpus count from parquet-mr footers via catalog.table_rows
+        "simhash128_hamming_stats": 18,
     }
     stale = tuple(
         sorted(

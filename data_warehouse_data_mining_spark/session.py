@@ -77,10 +77,10 @@ def get_session(
 def memo(spark: SparkSession, key: Hashable, build: Callable[[], T]) -> T:
     """Run ``build()`` once per (session, key) and return its result.
 
-    The one store for driver artifacts (table handles, conf pin, fit
-    samples, codebooks, yardsticks) lives in the session object's own
-    ``__dict__``: a stopped session takes its artifacts with it, and a
-    ``newSession()`` clone starts empty."""
+    The one store for driver artifacts (table handles, conf pin,
+    footer-reader classes, fit samples, codebooks, yardsticks) lives in
+    the session object's own ``__dict__``: a stopped session takes its
+    artifacts with it, and a ``newSession()`` clone starts empty."""
     store = spark.__dict__.setdefault("_spark_graft_memo", {})
     if key not in store:
         store[key] = build()

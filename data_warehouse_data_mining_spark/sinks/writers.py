@@ -32,6 +32,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_warehouse_data_mining_spark.catalog import read_parquet
+
 
 def write_partitioned(
     df: DataFrame,
@@ -145,7 +147,7 @@ def compact_files(
     rewrites that can destroy data on failure."""
     total = sum(f.stat().st_size for f in Path(path).rglob("*.parquet"))
     n_files = max(1, -(-total // target_file_bytes))
-    spark.read.parquet(path).coalesce(n_files).write.mode(mode).parquet(out_path)
+    read_parquet(spark, path).coalesce(n_files).write.mode(mode).parquet(out_path)
     return n_files
 
 

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from data_warehouse_data_mining_spark.catalog import read_parquet
+
 
 def read_csv(
     spark: SparkSession,
@@ -77,7 +79,7 @@ def compact_parquet(
     pruning. The small-files problem is the top operational issue of
     long-running ingestion at scale — every downstream scan pays per-file
     open cost until someone compacts."""
-    df = spark.read.parquet(src_dir)
+    df = read_parquet(spark, src_dir)
     if sort_by:
         df = df.repartitionByRange(target_files, *sort_by).sortWithinPartitions(*sort_by)
     else:

@@ -172,10 +172,11 @@ def read_event_stream(
     from data_warehouse_data_mining_spark.catalog import (
         normalize_events,
         pin_oracle_confs,
+        read_parquet,
     )
 
     pin_oracle_confs(spark)
-    raw_schema = spark.read.parquet(source_dir).schema
+    raw_schema = read_parquet(spark, source_dir).schema
     return normalize_events(
         spark.readStream.schema(raw_schema).parquet(source_dir)
     ).withWatermark("ts", watermark)

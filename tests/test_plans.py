@@ -305,8 +305,7 @@ def test_bounded_state_builders_schedule_no_jobs(spark):
     """Building a bounded-state iterative query runs no Spark job: the
     markov walk and the ucb1 pivot are lazy plans, so every job they
     cost is scheduled by the action that reads them. The catalog is
-    loaded first — the parquet schema read is the catalog's job, not
-    the builder's."""
+    loaded first, so only the builder's own work is counted."""
     from data_warehouse_data_mining_spark.catalog import load
     from data_warehouse_data_mining_spark.operators.mining_policy import (
         ucb1_bandit_replay,
@@ -905,6 +904,93 @@ def test_no_module_level_caches():
         f"{problems}"
     )
     assert used == set(waivers), f"stale waiver(s): {set(waivers) - used}"
+
+
+def test_parquet_reads_go_through_read_parquet():
+    """Repo-wide AST lint: every batch parquet read in the package goes
+    through `catalog.read_parquet`. A `.parquet(` call on a reader chain
+    that starts at `.read` (`spark.read.parquet`,
+    `spark.read.option(...).parquet`) runs a Spark job just to infer the
+    schema from one footer, which `read_parquet` reads on the driver.
+    Streaming reads (`readStream.schema(...).parquet`) and writes are
+    not batch reads and pass."""
+    import ast
+    import os
+
+    import data_warehouse_data_mining_spark as pkg
+
+    allowed = ("catalog.py", "read_parquet")
+
+    def parquet_reads(tree):
+        """(lineno, enclosing function) of every `.parquet(` call whose
+        receiver chain passes through a `.read` attribute."""
+        hits = set()
+
+        def from_read(node):
+            while isinstance(node, (ast.Call, ast.Attribute)):
+                if isinstance(node, ast.Call):
+                    node = node.func
+                elif node.attr == "read":
+                    return True
+                else:
+                    node = node.value
+            return False
+
+        def visit(node, fn):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                fn = node.name
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+                and from_read(node.func.value)
+            ):
+                hits.add((node.lineno, fn))
+            for child in ast.iter_child_nodes(node):
+                visit(child, fn)
+
+        visit(tree, None)
+        return sorted(hits)
+
+    # lint self-test (positive AND negative controls) so a refactor that
+    # silently stops it firing fails here, not as a schema-inference job
+    control = ast.parse(
+        "def plain(spark, p):\n"
+        "    return spark.read.parquet(p)\n"  # 2: flag
+        "def with_option(df, p):\n"
+        "    return df.sparkSession.read.option('x', 1).parquet(p)\n"  # 4: flag
+        "def stream_ok(spark, s, p):\n"
+        "    return spark.readStream.schema(s).parquet(p)\n"  # no flag
+        "def write_ok(df, p):\n"
+        "    df.write.mode('overwrite').parquet(p)\n"  # no flag
+        "def read_parquet(spark, p):\n"
+        "    return spark.read.schema(s).parquet(p)\n"  # 10: flag (waived by file)
+    )
+    assert parquet_reads(control) == [
+        (2, "plain"),
+        (4, "with_option"),
+        (10, "read_parquet"),
+    ]
+
+    pkg_root = os.path.dirname(os.path.abspath(pkg.__file__))
+    problems, used = [], False
+    for root, _dirs, files in os.walk(pkg_root):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(root, fname)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), filename=path)
+            for lineno, fn in parquet_reads(tree):
+                if (fname, fn) == allowed:
+                    used = True
+                else:
+                    problems.append(f"{path}:{lineno} ({fn})")
+    assert not problems, (
+        "parquet read outside catalog.read_parquet (call it instead): "
+        f"{problems}"
+    )
+    assert used, "catalog.read_parquet no longer reads parquet"
 
 
 def test_no_broadcast_hints_on_unbounded_tables():

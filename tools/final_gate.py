@@ -84,6 +84,8 @@ def _pytest_fast():
             + "::test_lineage_truncation_lives_in_iterate",
             os.path.join(REPO, "tests", "test_plans.py")
             + "::test_no_module_level_caches",
+            os.path.join(REPO, "tests", "test_plans.py")
+            + "::test_parquet_reads_go_through_read_parquet",
             "-p", "no:cacheprovider",
         ],
         capture_output=True, text=True, cwd=REPO,
