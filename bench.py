@@ -34,7 +34,7 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 # (SCALING.md r8 — ±35% min wobble at 0.35 in-guest loadavg), and the
 # min is the only interference-resistant statistic; two more samples
 # per query materially improve the chance one lands in a quiet window.
-RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "7"))
+DEFAULT_RUNS = "7"
 REPO = os.path.dirname(os.path.abspath(__file__))
 
 
@@ -63,7 +63,7 @@ CORE_BASELINE_SET = frozenset({
 # after the r12/r13 rewrites they run 1.3-3.9 s, and at 3 samples the
 # min — the host's only interference-resistant statistic — is owned by
 # a single noisy window (r13-opt: dsir flagged a min "regression" that
-# interleaved A/B disproved). dsir/ivf_pq now take the full RUNS;
+# interleaved A/B disproved). dsir/ivf_pq now take the full run count;
 # prefix keeps a reduced-but-larger 5 (~4 s/run). Old 3-sample numbers
 # remain in BENCH_r12 history; medians are unaffected in expectation.
 PER_QUERY_RUNS = {
@@ -147,7 +147,25 @@ def _preflight_load() -> dict:
     }
 
 
+def _runs() -> int:
+    """SPARK_GRAFT_BENCH_RUNS as a sample count; exit 2 unless it is an
+    integer >= 1 (0 would start Spark only to fail on an empty median)."""
+    raw = os.environ.get("SPARK_GRAFT_BENCH_RUNS", DEFAULT_RUNS)
+    try:
+        runs = int(raw)
+    except ValueError:
+        runs = 0
+    if runs < 1:
+        print(
+            f"SPARK_GRAFT_BENCH_RUNS must be an integer >= 1, got {raw!r}",
+            file=sys.stderr,
+        )
+        sys.exit(2)
+    return runs
+
+
 def main() -> None:
+    runs = _runs()
     preflight = _preflight_load()
     if preflight["busy_at_start"]:
         print(
@@ -198,7 +216,7 @@ def main() -> None:
             # first sample (BENCH_DETAIL r12 sample_spread 3.5). Serving
             # latency, not training cost, is what this query measures.
             _force(qs[name].builder(spark, SF_DIR))
-        for _ in range(PER_QUERY_RUNS.get(name, RUNS)):
+        for _ in range(PER_QUERY_RUNS.get(name, runs)):
             t0 = time.perf_counter()
             _force(qs[name].builder(spark, SF_DIR))
             samples.append(time.perf_counter() - t0)

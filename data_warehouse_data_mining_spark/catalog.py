@@ -188,31 +188,46 @@ def _parquet_jvm(spark: SparkSession) -> SimpleNamespace:
     return memo(spark, ("parquet_jvm",), build)
 
 
-def _footers(spark: SparkSession, path: str) -> Iterator[tuple[Any, Any]]:
-    """Yield (Hadoop Path, parquet-mr footer) of every data file under
-    ``path`` — a file, a directory or a glob — lazily, in name order.
-    Listing goes through Hadoop's FileSystem with the session's Hadoop
-    conf, and hides what Spark's file index hides: names starting with
-    ``.`` or ``_`` (``_SUCCESS``, ``.crc``, ``_temporary``) unless the
-    name is a ``k=v`` partition."""
+def parquet_files(
+    spark: SparkSession, path: str, conf: Any = None
+) -> Iterator[Any]:
+    """Yield the Hadoop ``FileStatus`` of every data file under ``path``
+    — a file, a directory or a glob, local or remote — lazily, in name
+    order. Listing goes through Hadoop's FileSystem with ``conf`` (by
+    default the session's Hadoop conf), and hides what Spark's file
+    index hides: names starting with ``.`` or ``_`` (``_SUCCESS``,
+    ``.crc``, ``_temporary``) unless the name is a ``k=v`` partition."""
     jvm = _parquet_jvm(spark)
-    state = spark._jsparkSession.sessionState()  # type: ignore[attr-defined]
-    conf = state.newHadoopConf()
+    if conf is None:
+        state = spark._jsparkSession.sessionState()  # type: ignore[attr-defined]
+        conf = state.newHadoopConf()
     root = jvm.Path(path)
     fs = root.getFileSystem(conf)
     stack = list(fs.globStatus(root) or [])[::-1]
     while stack:
         status = stack.pop()
-        file = status.getPath()
         if not status.isDirectory():
-            yield file, jvm.ParquetFileReader.readFooter(conf, file)
+            yield status
             continue
-        children = {c.getPath().getName(): c for c in fs.listStatus(file)}
+        children = {
+            c.getPath().getName(): c for c in fs.listStatus(status.getPath())
+        }
         stack.extend(
             children[n]
             for n in sorted(children, reverse=True)
             if not (n.startswith(".") or (n.startswith("_") and "=" not in n))
         )
+
+
+def _footers(spark: SparkSession, path: str) -> Iterator[tuple[Any, Any]]:
+    """Yield (Hadoop Path, parquet-mr footer) of every ``parquet_files``
+    entry under ``path``."""
+    jvm = _parquet_jvm(spark)
+    state = spark._jsparkSession.sessionState()  # type: ignore[attr-defined]
+    conf = state.newHadoopConf()
+    for status in parquet_files(spark, path, conf):
+        file = status.getPath()
+        yield file, jvm.ParquetFileReader.readFooter(conf, file)
 
 
 def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:

@@ -1,11 +1,11 @@
 """Named-query registry.
 
 Every operator the engine claims (SURVEY.md §2) is registered here as a
-named query: a builder ``(spark, sf_dir) -> DataFrame`` plus, when the
-semantics are ANSI-SQL-expressible, an oracle SQL string that DuckDB
-runs over the same parquet tables. The driver compares the two
-(row-count + schema + order-insensitive value-hash), so builders and
-oracles must agree on column NAMES and on deterministic VALUES:
+named query: a builder ``(spark, sf_dir) -> DataFrame`` plus its oracle
+SQL string that DuckDB runs over the same parquet tables. The driver
+compares the two (row-count + schema + order-insensitive value-hash), so
+builders and oracles must agree on column NAMES and on deterministic
+VALUES:
 
 * every computed column is aliased identically on both sides;
 * every double is rounded (sums: 2 decimals, ratios/avgs: 6) so that
@@ -28,7 +28,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class Query:
     name: str
     builder: QueryFn
-    oracle: str | None = None
+    oracle: str
     headline: bool = False
     doc: str = ""
 
@@ -38,11 +38,11 @@ _REGISTRY: dict[str, Query] = {}
 
 def register(
     name: str,
-    oracle: str | None = None,
+    oracle: str,
     headline: bool = False,
     doc: str = "",
 ) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: register a named query with optional oracle SQL."""
+    """Decorator: register a named query with its oracle SQL."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
@@ -226,15 +226,14 @@ def all_queries() -> dict[str, Query]:
         return out
 
     def is_seen(q: Query) -> bool:
-        if q.name not in _SEEN_IN_DRIVER_ROUNDS:
-            return False
-        # latest driver row was the weaker rows-only check but the query
-        # has since gained an oracle (r5: FPGrowth/PrefixSpan/CV-grid
-        # conversions) — re-queue as fresh so the upgrade lands an exact
-        # hash row instead of waiting behind every green
-        if q.name in _ROWS_ONLY_AT_LATEST and q.oracle is not None:
-            return False
-        return True
+        # a latest driver row that was the weaker rows-only check predates
+        # the query's oracle (r5: FPGrowth/PrefixSpan/CV-grid conversions)
+        # — re-queue it as fresh so the exact hash row lands instead of
+        # waiting behind every green
+        return (
+            q.name in _SEEN_IN_DRIVER_ROUNDS
+            and q.name not in _ROWS_ONLY_AT_LATEST
+        )
 
     rest = [q for q in _REGISTRY.values() if q.name not in pinned_names]
     fresh = round_robin([q for q in rest if not is_seen(q)])
@@ -248,7 +247,7 @@ def query_fns() -> dict[str, QueryFn]:
 
 
 def oracle_sqls() -> dict[str, str]:
-    return {n: q.oracle for n, q in all_queries().items() if q.oracle is not None}
+    return {n: q.oracle for n, q in all_queries().items()}
 
 
 def headline_queries() -> dict[str, Query]:

@@ -27,12 +27,11 @@ write layout decides every downstream read's cost. Three layouts:
 from __future__ import annotations
 
 from collections.abc import Sequence
-from pathlib import Path
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_warehouse_data_mining_spark.catalog import read_parquet
+from data_warehouse_data_mining_spark.catalog import parquet_files, read_parquet
 
 
 def write_partitioned(
@@ -140,12 +139,13 @@ def compact_files(
     The daily maintenance job of every streaming/incremental sink — a
     micro-batch writer leaves one file per trigger per partition, and a
     year of 30-second triggers is a million tiny files whose footer
-    reads dominate scan time. Sizing from the ACTUAL byte size (not a
-    guessed partition count) and using ``coalesce`` (a scan-side
-    partition merge, NO shuffle) keeps the rewrite one pass over the
-    data. Writes to a new directory: swap-on-success beats in-place
+    reads dominate scan time. Sizing from the ACTUAL byte size of the
+    files the read will scan (not a guessed partition count; listed
+    through Hadoop, so ``file://`` and remote roots count too) and
+    using ``coalesce`` (a scan-side partition merge, NO shuffle) keeps
+    the rewrite one pass over the data. Writes to a new directory: swap-on-success beats in-place
     rewrites that can destroy data on failure."""
-    total = sum(f.stat().st_size for f in Path(path).rglob("*.parquet"))
+    total = sum(f.getLen() for f in parquet_files(spark, path))
     n_files = max(1, -(-total // target_file_bytes))
     read_parquet(spark, path).coalesce(n_files).write.mode(mode).parquet(out_path)
     return n_files

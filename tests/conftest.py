@@ -1,19 +1,18 @@
 """Shared fixtures: one tuned SparkSession per test session, plus a
-DuckDB connection with the testdata views registered (mirroring the
-driver's oracle harness)."""
+DuckDB connection with the testdata views registered (the oracle
+comparator's own, tools/driver_sweep.py::duckdb_views)."""
 
 from __future__ import annotations
 
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from data_warehouse_data_mining_spark.catalog import TABLE_NAMES
 from data_warehouse_data_mining_spark.session import get_session
+from tools.driver_sweep import duckdb_views
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MEDIUM = "/root/testdata/sf0.01"
@@ -33,11 +32,7 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for name in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM '{SF_SMALL}/{name}.parquet'"
-        )
+    con = duckdb_views(SF_SMALL)
     yield con
     con.close()
 

@@ -25,7 +25,6 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from data_warehouse_data_mining_spark import oracle
 from data_warehouse_data_mining_spark.catalog import TABLE_NAMES
 from data_warehouse_data_mining_spark.operators.dedup import (
     shingle_table,
@@ -33,8 +32,22 @@ from data_warehouse_data_mining_spark.operators.dedup import (
     simhash128_table,
 )
 from data_warehouse_data_mining_spark.operators.text import tfidf_top_terms_table
+from data_warehouse_data_mining_spark.registry import all_queries
+from tools.driver_sweep import check, duckdb_views
 
 from .conftest import SF_SMALL
+
+
+def _oracle_mismatch(spark, sf_dir: str, name: str) -> str | None:
+    """The oracle comparator's verdict on one registered query over
+    the tables in ``sf_dir``: None, or why it differs."""
+    q = all_queries()[name]
+    con = duckdb_views(sf_dir)
+    try:
+        return check(q.builder(spark, sf_dir), con, q.oracle)
+    finally:
+        con.close()
+
 
 REPEAT_N = 12_000  # > 10k tokens, single repeated token
 DISTINCT_N = 10_001  # > 10k distinct tokens
@@ -173,11 +186,7 @@ def test_oracle_parity_on_adversarial_corpus(spark, adv_dir, name):
     their DuckDB oracles when the documents table is adversarial — the
     engines' split/md5/banding semantics agree on empty strings, 12k-
     token docs, and Unicode confusables, not just on tidy fixtures."""
-    con = oracle.duckdb_connection(adv_dir)
-    try:
-        err = oracle.compare_query(name, spark, con, adv_dir)
-    finally:
-        con.close()
+    err = _oracle_mismatch(spark, adv_dir, name)
     assert err is None, f"{name}: {err}"
 
 
@@ -283,16 +292,8 @@ def test_edit_distance_complete_on_degenerate_leads(spark, short_dir):
     'hello'/'help!' and 'abcd'/'abce' even though they share no 4-gram,
     and the repetitive-lead pair (docs 8/9, 1-2 distinct grams at
     60+ chars) must route through the degenerate path too."""
-    con = oracle.duckdb_connection(short_dir)
-    try:
-        err = oracle.compare_query(
-            "edit_distance_neardup_pairs", spark, con, short_dir
-        )
-    finally:
-        con.close()
+    err = _oracle_mismatch(spark, short_dir, "edit_distance_neardup_pairs")
     assert err is None, err
-    from data_warehouse_data_mining_spark.registry import all_queries
-
     rows = (
         all_queries()["edit_distance_neardup_pairs"]
         .builder(spark, short_dir)
@@ -325,19 +326,11 @@ def test_fs_em_params_empty_pair_set(spark, lone_customer_dir):
     engines must return ZERO rows ("no pairs -> no estimate") instead
     of a ZeroDivisionError in the EM walk (Spark) or one NULL-
     propagated junk row (DuckDB) — the r13 ADVICE degenerate case."""
-    from data_warehouse_data_mining_spark.registry import all_queries
-
     sdf = all_queries()["fellegi_sunter_em_params"].builder(
         spark, lone_customer_dir
     )
     assert sdf.count() == 0
-    con = oracle.duckdb_connection(lone_customer_dir)
-    try:
-        err = oracle.compare_query(
-            "fellegi_sunter_em_params", spark, con, lone_customer_dir
-        )
-    finally:
-        con.close()
+    err = _oracle_mismatch(spark, lone_customer_dir, "fellegi_sunter_em_params")
     assert err is None, err
 
 
@@ -406,11 +399,7 @@ def test_oracle_parity_with_zero_vectors(spark, zero_vec_dir, name):
     """Exact engine parity of the cosine tier on a corpus containing
     zero-norm embeddings (r13: before the exclusion contract, Spark
     threw DIVIDE_BY_ZERO where DuckDB yielded NULL)."""
-    con = oracle.duckdb_connection(zero_vec_dir)
-    try:
-        err = oracle.compare_query(name, spark, con, zero_vec_dir)
-    finally:
-        con.close()
+    err = _oracle_mismatch(spark, zero_vec_dir, name)
     assert err is None, f"{name}: {err}"
 
 
@@ -441,11 +430,5 @@ def test_dim_correlation_parity_with_constant_dimension(
     for name in TABLE_NAMES:
         if name != "embeddings":
             os.symlink(f"{SF_SMALL}/{name}.parquet", str(d / f"{name}.parquet"))
-    con = oracle.duckdb_connection(str(d))
-    try:
-        err = oracle.compare_query(
-            "embedding_dim_correlation", spark, con, str(d)
-        )
-    finally:
-        con.close()
+    err = _oracle_mismatch(spark, str(d), "embedding_dim_correlation")
     assert err is None, err

@@ -1,24 +1,22 @@
-"""Every registered query with an oracle is executed BOTH ways (Spark at
-sf0.001, the oracle SQL through DuckDB on the same parquet) and compared
-exactly — a local mirror of the driver's t2 correctness gate, via the
-shared harness in data_warehouse_data_mining_spark.oracle."""
+"""Every registered query is executed BOTH ways (Spark at sf0.001, the
+oracle SQL through DuckDB on the same parquet) and compared exactly — a
+local mirror of the driver's t2 correctness gate, through the one
+oracle comparator in tools/driver_sweep.py."""
 
 from __future__ import annotations
 
 import pytest
 
-from data_warehouse_data_mining_spark import oracle
 from data_warehouse_data_mining_spark.registry import all_queries
+from tools.driver_sweep import check, duckdb_views
 
 from .conftest import SF_SMALL
 
 _QUERIES = all_queries()
-ORACLE_NAMES = sorted(n for n, q in _QUERIES.items() if q.oracle is not None)
-ROWS_ONLY_NAMES = sorted(n for n, q in _QUERIES.items() if q.oracle is None)
 
 
 @pytest.fixture(scope="module")
-def parity_results(spark, bound_registry_dfs):
+def parity_results(bound_registry_dfs):
     """All 440+ oracle comparisons executed ONCE, concurrently (r12,
     VERDICT r11 #7): the per-query cost at sf0.001 is Spark job-
     scheduling LATENCY, not compute (measured 89 s Spark vs 3 s DuckDB
@@ -35,49 +33,23 @@ def parity_results(spark, bound_registry_dfs):
 
     def get_con():
         if not hasattr(local, "con"):
-            local.con = oracle.duckdb_connection(SF_SMALL)
+            local.con = duckdb_views(SF_SMALL)
         return local.con
 
     def one_parity(name: str) -> tuple[str, str | None]:
-        sdf = bound_registry_dfs.get(name)
+        sdf = bound_registry_dfs[name]
         if isinstance(sdf, str):
             return name, sdf
         try:
-            return name, oracle.compare_query(
-                name, spark, get_con(), SF_SMALL, sdf=sdf
-            )
+            return name, check(sdf, get_con(), _QUERIES[name].oracle)
         except Exception as exc:  # surface as a per-test failure
             return name, f"exception: {exc!r}"
 
-    def one_rows_only(name: str) -> tuple[str, str | None]:
-        df = bound_registry_dfs.get(name)
-        if isinstance(df, str):
-            return name, df
-        try:
-            if df is None:
-                df = _QUERIES[name].builder(spark, SF_SMALL)
-            n = df.count()
-            if n < 0 or not df.columns:
-                return name, f"degenerate result: rows={n} cols={df.columns}"
-            return name, None
-        except Exception as exc:
-            return name, f"exception: {exc!r}"
-
     with ThreadPoolExecutor(max_workers=8) as ex:
-        out = dict(ex.map(one_parity, ORACLE_NAMES))
-        out.update(dict(ex.map(one_rows_only, ROWS_ONLY_NAMES)))
-    return out
+        return dict(ex.map(one_parity, sorted(_QUERIES)))
 
 
-@pytest.mark.parametrize("name", ORACLE_NAMES)
+@pytest.mark.parametrize("name", sorted(_QUERIES))
 def test_oracle_parity(parity_results, name):
-    err = parity_results[name]
-    assert err is None, f"{name}: {err}"
-
-
-@pytest.mark.parametrize("name", ROWS_ONLY_NAMES)
-def test_rows_only_queries_run(parity_results, name):
-    """Queries without an oracle must still run and return a stable,
-    non-degenerate result (the driver's weaker check)."""
     err = parity_results[name]
     assert err is None, f"{name}: {err}"

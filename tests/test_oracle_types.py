@@ -1,19 +1,19 @@
-"""Type-level oracle lint: the r2 red rows were NOT value bugs — DuckDB
-promotes sum(BIGINT) to HUGEINT, the local canonicalizer stringifies it
-the same as BIGINT, but the external driver's does not, so the
-value-hash diverged while every local check stayed green. The local
-parity mirror therefore CANNOT catch this class; binding each oracle
-and asserting no unportable output types is the guard that can.
-DESCRIBE only binds (no execution), so this covers all oracles in
-seconds."""
+"""Type-level oracle lint, plus the one oracle canon's own checks.
+
+The r2 red rows were NOT value bugs — DuckDB promotes sum(BIGINT) to
+HUGEINT, the then-separate local canonicalizer stringified it the same
+as BIGINT, but the external driver's did not, so the value-hash
+diverged while every local check stayed green. A value comparison
+cannot see a type's rendering; binding each oracle and asserting no
+unportable output types is the guard that can. DESCRIBE only binds (no
+execution), so this covers all oracles in seconds."""
 
 from __future__ import annotations
 
 import pytest
 
-from data_warehouse_data_mining_spark import oracle, registry
-
-from .conftest import SF_SMALL
+from data_warehouse_data_mining_spark import registry
+from tools.driver_sweep import canon_cell, compare, nonscalar_columns
 
 # Types whose text rendering is engine/canonicalizer-sensitive. HUGEINT
 # is the proven offender (r2); DECIMAL is the second proven offender
@@ -22,13 +22,6 @@ from .conftest import SF_SMALL
 # THROUGH decimal internally, but the output edge must be
 # BIGINT/DOUBLE/etc.
 _FORBIDDEN = ("HUGEINT", "UHUGEINT", "DECIMAL")
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = oracle.duckdb_connection(SF_SMALL)
-    yield con
-    con.close()
 
 
 def test_no_hugeint_typed_columns_in_any_oracle(duck):
@@ -72,19 +65,40 @@ def test_oracle_output_types_are_portable(duck):
 
 
 def test_canon_distinguishes_decimal_from_double():
-    """The harness blind spot that let r4's red row pass locally for
-    two rounds: canon() collapsed Decimal->float, so Spark
-    DECIMAL(27,6) vs DuckDB DOUBLE hashed identically here while the
-    external driver (which stringifies) flagged them. canon() must
-    preserve decimal scale so the divergence fails LOCALLY."""
+    """The blind spot that let r4's red row pass locally for two rounds:
+    a second canon collapsed Decimal->float, so Spark DECIMAL(27,6) vs
+    DuckDB DOUBLE hashed identically here while the external driver
+    (which stringifies) flagged them. The canon must preserve decimal
+    scale, keep a bool apart from the int it equals, render bytes as
+    hex and fold -0.0 into 0.0."""
     from decimal import Decimal
 
-    from data_warehouse_data_mining_spark.oracle import canon
-
-    assert canon(Decimal("1290671.940000")) != canon(1290671.94)
-    assert canon(Decimal("1290671.94")) == "1290671.94"
+    assert canon_cell(Decimal("1290671.940000")) != canon_cell(1290671.94)
+    assert canon_cell(Decimal("1290671.94")) == "1290671.94"
     # same-scale decimal on both sides still agrees
-    assert canon(Decimal("3.471")) == canon(3.471)
+    assert canon_cell(Decimal("3.471")) == canon_cell(3.471)
+    assert canon_cell(True) == "True" and canon_cell(False) == "False"
+    assert canon_cell(True) != canon_cell(1)
+    assert canon_cell(False) != canon_cell(0)
+    assert canon_cell(b"\x00\xff") == "00ff"
+    assert canon_cell(-0.0) == canon_cell(0.0) == "0.0"
+
+
+def test_compare_rejects_boolean_against_integer():
+    """A Spark BOOLEAN column must not match a DuckDB 0/1 INTEGER column
+    — the external driver stringifies True and 1 differently."""
+    from pyspark.sql.types import (
+        BooleanType, LongType, StructField, StructType,
+    )
+
+    schema = StructType(
+        [StructField("k", LongType()), StructField("flag", BooleanType())]
+    )
+    spark_rows = [(1, True), (2, False)]
+    same = compare(schema, spark_rows, ["flag", "k"], [(True, 1), (False, 2)])
+    assert same is None
+    reason = compare(schema, spark_rows, ["flag", "k"], [(1, 1), (0, 2)])
+    assert reason is not None and "2 row mismatches" in reason
 
 
 @pytest.fixture(scope="module")
@@ -133,23 +147,14 @@ def test_no_container_typed_columns_in_any_spark_query(spark_query_schemas):
     cells — but OUR canon stringifies lists, so the query was green
     locally and red externally. Registered outputs must be scalar-only;
     arrays become `array_join`ed strings, structs/maps become digests.
-    tools/driver_sweep.py enforces the same rule at run time."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "driver_sweep",
-        os.path.join(os.path.dirname(__file__), "..", "tools", "driver_sweep.py"),
-    )
-    sweep = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(sweep)
-
+    tools/driver_sweep.py's comparator enforces the same rule at run
+    time."""
     bad = {}
     for name, schema in spark_query_schemas.items():
         if isinstance(schema, str):
             bad[name] = schema
             continue
-        hits = sweep.nonscalar_columns(schema)
+        hits = nonscalar_columns(schema)
         if hits:
             bad[name] = hits
     assert not bad, (

@@ -112,6 +112,29 @@ def test_compact_files_reduces_file_count(spark, tmp_path):
     assert back.count() == e.count()
 
 
+def test_compact_files_sizes_a_file_uri_like_a_plain_path(spark, tmp_path):
+    """Compaction sizes from the Hadoop listing the read itself uses, so
+    a ``file://`` URI of a directory compacts into as many files as its
+    plain path (a local-filesystem walk finds no file under a URI, and
+    the whole input was rewritten into one)."""
+    from data_warehouse_data_mining_spark.sinks import compact_files
+
+    src = str(tmp_path / "fragmented")
+    load(spark, SF_SMALL).events.repartition(8).write.parquet(src)
+    total = sum(
+        os.path.getsize(f) for f in glob.glob(os.path.join(src, "*.parquet"))
+    )
+    target = total // 3 + 1  # three files' worth
+    plain = compact_files(
+        spark, src, str(tmp_path / "plain"), target_file_bytes=target
+    )
+    uri = compact_files(
+        spark, "file://" + src, str(tmp_path / "uri"), target_file_bytes=target
+    )
+    assert plain == uri == 3
+    assert len(glob.glob(str(tmp_path / "uri" / "*.parquet"))) == 3
+
+
 def test_zordered_layout_prunes_on_both_columns(spark, tmp_path):
     """Z-order writes must localize file min/max ranges in BOTH sort
     columns, so footer-level pruning works for either predicate — a

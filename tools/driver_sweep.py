@@ -1,9 +1,15 @@
-"""Driver-style correctness sweep: run EVERY registered query on Spark
-and its DuckDB oracle side-by-side at a given SF, compare rows/schema/
-values with the driver's canon (sort columns by name, sort rows
-stringified, Decimal->str scale-preserving — a Spark DECIMAL against a
-DuckDB DOUBLE must FAIL here like it fails externally (the r4
-rfm_segmentation lesson), timestamps->str, -0.0->0.0).
+"""The one oracle comparator, and a driver-style correctness sweep.
+
+The comparator (``canon_cell``/``canon_rows``, ``nonscalar_columns``,
+``compare``, ``check``, ``duckdb_views``) is the driver's canon: sort
+columns by name, sort rows stringified, Decimal->str scale-preserving
+(a Spark DECIMAL against a DuckDB DOUBLE must FAIL, the r4
+rfm_segmentation lesson), bool->True/False (never equal to 0/1),
+bytes->hex, timestamps->str, -0.0->0.0, floats exact. The test suite,
+this sweep and perfbench's verification pass all compare through it.
+
+The sweep runs EVERY registered query on Spark and its DuckDB oracle
+side-by-side at a given SF.
 
 Usage: python tools/driver_sweep.py [sf_dir] [--only name1,name2] [--master=local[N]] [--shuffle=P]
 Prints one status line per query and a final summary; exit 1 on any
@@ -63,6 +69,54 @@ def canon_rows(cols, rows):
     return out
 
 
+def compare(schema, srows, ocols, orows):
+    """None when Spark's result (its ``schema`` and collected rows)
+    equals the oracle's (column names and rows), else the reason."""
+    bad = nonscalar_columns(schema)
+    if bad:
+        return (
+            f"non-scalar output column(s) {bad} would crash the external "
+            "canonicalizer"
+        )
+    scols = schema.names
+    if sorted(scols) != sorted(ocols):
+        return f"columns differ: spark={scols} oracle={ocols}"
+    if len(srows) != len(orows):
+        return f"row count differs: spark={len(srows)} oracle={len(orows)}"
+    diffs = [
+        (x, y)
+        for x, y in zip(canon_rows(scols, srows), canon_rows(ocols, orows))
+        if x != y
+    ]
+    if diffs:
+        x, y = diffs[0]
+        return (
+            f"{len(diffs)} row mismatches; first: spark {x[:200]!r} "
+            f"oracle {y[:200]!r} (columns={sorted(scols)})"
+        )
+    return None
+
+
+def duckdb_views(sf_dir: str):
+    """A DuckDB connection with one view per catalog table of ``sf_dir``."""
+    import duckdb
+
+    from data_warehouse_data_mining_spark.catalog import TABLE_NAMES
+
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def check(sdf, con, oracle_sql: str):
+    """Collect ``sdf``, run ``oracle_sql`` on ``con`` and compare them."""
+    srows = [tuple(r) for r in sdf.collect()]
+    cur = con.execute(oracle_sql)
+    ocols = [d[0] for d in cur.description]
+    return compare(sdf.schema, srows, ocols, cur.fetchall())
+
+
 # Queries whose DuckDB oracle is an intentionally unfiltered O(n^2)
 # completeness proof: compared at the gate SFs (0.001/0.01) where the
 # proof is cheap; off-gate sweeps (sf0.1+) run the Spark side alone.
@@ -101,7 +155,6 @@ def main() -> int:
         elif a.startswith("--shuffle="):
             shuffle = a.split("=", 1)[1]
 
-    import duckdb
     import importlib.util
 
     spec = importlib.util.spec_from_file_location("__spark_entry__", os.path.join(os.path.dirname(__file__), "..", "__spark_entry__.py"))
@@ -118,13 +171,9 @@ def main() -> int:
         .getOrCreate()
     )
 
-    con = duckdb.connect()
-    for t in ["region", "nation", "customer", "supplier", "part", "orders", "lineitem", "events", "documents", "embeddings"]:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
+    con = duckdb_views(sf_dir)
     queries = mod.queries()
     oracles = mod.oracle_sql()
-    results = {}
     n_pass = n_rowsonly = n_fail = n_err = 0
     t_start = time.time()
     for name, fn in queries.items():
@@ -133,16 +182,6 @@ def main() -> int:
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            bad_cols = nonscalar_columns(sdf.schema)
-            if bad_cols:
-                n_fail += 1
-                results[name] = "FAIL"
-                print(
-                    f"FAIL      {name}: non-scalar output column(s) "
-                    f"{bad_cols} would crash the external canonicalizer"
-                )
-                continue
             srows = [tuple(r) for r in sdf.collect()]
             if name in ORACLE_GATE_SF_ONLY and _is_off_gate(sf_dir):
                 # the oracle is a deliberately UNFILTERED brute-force
@@ -151,41 +190,22 @@ def main() -> int:
                 # proof runs at the gate SFs; off-gate sweeps check the
                 # Spark side alone (VERDICT r12 #7).
                 n_rowsonly += 1
-                results[name] = "rows_only"
                 print(
                     f"ROWS-ONLY {name}: {len(srows)} rows "
                     f"(gate-SF-only oracle, {time.time()-t0:.1f}s)"
                 )
                 continue
-            if name not in oracles:
-                n_rowsonly += 1
-                results[name] = "rows_only"
-                print(f"ROWS-ONLY {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
-                continue
             cur = con.execute(oracles[name])
             ocols = [d[0] for d in cur.description]
-            orows = cur.fetchall()
-            ok_schema = sorted(scols) == sorted(ocols)
-            ok_rows = len(srows) == len(orows)
-            ok_hash = canon_rows(scols, srows) == canon_rows(ocols, orows)
-            if ok_schema and ok_rows and ok_hash:
+            reason = compare(sdf.schema, srows, ocols, cur.fetchall())
+            if reason is None:
                 n_pass += 1
-                results[name] = "pass"
                 print(f"PASS      {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
             else:
                 n_fail += 1
-                results[name] = "FAIL"
-                print(f"FAIL      {name}: schema={ok_schema} rows={ok_rows} ({len(srows)} vs {len(orows)}) hash={ok_hash}")
-                if ok_schema and ok_rows:
-                    a = canon_rows(scols, srows)
-                    b = canon_rows(ocols, orows)
-                    diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
-                    for x, y in diffs:
-                        print(f"   spark:  {x[:200]}")
-                        print(f"   oracle: {y[:200]}")
+                print(f"FAIL      {name}: {reason}")
         except Exception:
             n_err += 1
-            results[name] = "ERROR"
             print(f"ERROR     {name}")
             traceback.print_exc(limit=3)
     total = n_pass + n_rowsonly + n_fail + n_err
