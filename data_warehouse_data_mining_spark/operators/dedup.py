@@ -2084,13 +2084,10 @@ def prefix_filter_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     df_tbl = tok0.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("df"))
     # exact global df-rank as the integer token id: rank by (df asc, w)
     # via the two-phase distributed prefix sum — a bijection, so every
-    # downstream count/intersection is exactly the string computation's
-    # vocab-sized staged mapping (the grid_lof model-table precedent):
-    # global_order_stats is itself a multi-pass plan, and without the
-    # pin every downstream consumer of tok re-derives it — the executed
-    # plan showed 22 document scans vs 5 with the checkpoint. The
-    # token-frequency dictionary is the one thing every df-ordered
-    # prefix filter materializes; it is vocab-sized, never corpus-sized.
+    # downstream count/intersection is exactly the string computation's.
+    # The vocab-sized mapping is pinned: both forms execute 2 document
+    # scans, but without the pin build+collect is ~13 % slower at sf0.01
+    # (4-core host, local[3], 8 shuffle partitions).
     vocab = (
         global_order_stats(df_tbl, "df", "w", ascending=True)
         .select("w", F.col("global_rank").alias("t"))
@@ -2318,8 +2315,8 @@ def edit_distance_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter (a pruned qualifying pair would surface as a missing row).
 
     Scale shape: grams explode map-side from a 2-column pruned scan;
-    the df-rank mapping is vocab-bounded (<= alphabet^{ED_Q}) and
-    checkpointed; the candidate join touches only {ED_PLEN} grams per
+    the df-rank mapping is vocab-bounded (<= alphabet^{ED_Q}); the
+    candidate join touches only {ED_PLEN} grams per
     document with the length filter in the join condition; per-pair
     verification cost is bounded by the {ED_LEAD}-char fingerprint
     ({ED_LEAD}x{ED_LEAD} banded DP), never document length."""
@@ -2347,11 +2344,8 @@ def edit_distance_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     df_tbl = grams.groupBy("g").agg(
         F.count(F.lit(1)).cast("long").alias("df")
     )
-    # vocab-bounded staged mapping (the prefix_filter precedent)
-    vocab = (
-        global_order_stats(df_tbl, "df", "g", ascending=True)
-        .select("g", F.col("global_rank").alias("t"))
-        .localCheckpoint(eager=True)
+    vocab = global_order_stats(df_tbl, "df", "g", ascending=True).select(
+        "g", F.col("global_rank").alias("t")
     )
     # SUFFIX signature (r13, carried over from prefix_filter_jaccard_
     # pairs where it cut the join output 230x): the shared

@@ -986,8 +986,8 @@ def adamic_adar_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     (top-d by weight) before the wedge join, the same mitigation the
     triangle count documents. Existing edges are removed by an
     anti-join, never materializing the non-edge complement."""
-    # narrow staged edge table (2 longs/row, catalog-pair-sized — the
-    # grid_lof staged-model-table precedent): sym/deg/wedge/anti-join
+    # narrow staged edge table (2 longs/row, catalog-pair-sized):
+    # sym/deg/wedge/anti-join
     # otherwise re-derive the basket self-join 7x
     e = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
     sym = e.select(F.col("lo").alias("a"), F.col("hi").alias("b")).unionAll(

@@ -950,9 +950,6 @@ def survival_km_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(1 - F.col("churned")).alias("n_censored"),
             F.count(F.lit(1)).alias("n_total"),
         )
-        # distinct-lifetime-sized; checkpoint so the two windows below
-        # don't each re-run the user collapse.
-        .localCheckpoint(eager=True)
     )
     w_risk = W.orderBy("t_days").rowsBetween(W.currentRow, W.unboundedFollowing)
     w_km = W.orderBy("t_days").rowsBetween(W.unboundedPreceding, W.currentRow)
@@ -1003,12 +1000,11 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the ×n_days-scaled deviation sum, so no double ever exists and
     both engines agree exactly. The fact scan collapses to a days-sized
     table first; both the running window and the 1-row peak regroup
-    run over that (checkpointed once)."""
+    run over that."""
     e = load(spark, sf_dir).events
     daily = (
         e.groupBy(F.to_date("ts").alias("day"))
         .agg(F.count(F.lit(1)).alias("n_events"))
-        .localCheckpoint(eager=True)
     )
     tot = daily.agg(
         F.count(F.lit(1)).alias("n_days"), F.sum("n_events").alias("n_tot")
@@ -1022,7 +1018,6 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_days") * F.col("n_events") - F.col("n_tot")
             ).over(w),
         )
-        .localCheckpoint(eager=True)
     )
     peak = cus.agg(F.max(F.abs(F.col("cusum_scaled"))).alias("peak_abs"))
     return (
@@ -1496,7 +1491,7 @@ def xyz_demand_variability(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def day_user_activity(events: DataFrame, checkpoint: bool = False) -> DataFrame:
+def day_user_activity(events: DataFrame) -> DataFrame:
     """(day, user_id, n_events, n_purch, is_new) — THE shared
     day×user activity grain: one events scan, one user_id-partitioned
     min() window marking each user's first-ever active day. Both
@@ -1510,8 +1505,6 @@ def day_user_activity(events: DataFrame, checkpoint: bool = False) -> DataFrame:
         .cast("long")
         .alias("n_purch"),
     )
-    if checkpoint:
-        du = du.localCheckpoint(eager=True)
     return du.select(
         "day",
         "user_id",
@@ -2692,7 +2685,6 @@ def abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("rev_fp")
         )
-        .localCheckpoint(eager=True)
     )
     ranked = global_order_stats(
         rev, "rev_fp", "l_partkey", measure_col="rev_fp", ascending=False
@@ -2849,7 +2841,6 @@ def rmst_restricted_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("churned").alias("n_churned"),
             F.count(F.lit(1)).alias("n_total"),
         )
-        .localCheckpoint(eager=True)
     )
     w_risk = W.orderBy("t_days").rowsBetween(
         W.currentRow, W.unboundedFollowing
@@ -2866,7 +2857,7 @@ def rmst_restricted_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("s_micro"),
         F.lead("t_days").over(W.orderBy("t_days")).alias("next_t"),
-    ).localCheckpoint(eager=True)
+    )
     segs = km.filter(F.col("t_days") < RMST_TAU_DAYS).select(
         "t_days",
         "s_micro",
@@ -3047,7 +3038,6 @@ def logrank_test_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("total_a"),
         )
-        .localCheckpoint(eager=True)
     )
     w_risk = W.orderBy("t_days").rowsBetween(
         W.currentRow, W.unboundedFollowing

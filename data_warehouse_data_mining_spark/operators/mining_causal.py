@@ -339,8 +339,7 @@ def psm_att_matched(spark: SparkSession, sf_dir: str) -> DataFrame:
             "treated",
             F.coalesce("y96", F.lit(0)).alias("y"),
         )
-        # narrow staged panel (4 longs/row, customer-level — the
-        # grid_lof staged-model-table precedent): the in-bucket
+        # narrow staged panel (4 longs/row, customer-level): the in-bucket
         # windows, control summaries, bucket spine and control count
         # otherwise re-run the two fact scans 4x each (plan audit)
         .localCheckpoint(eager=True)

@@ -654,7 +654,6 @@ def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("churned").cast("long").alias("n_churned"),
             F.count(F.lit(1)).cast("long").alias("n_total"),
         )
-        .localCheckpoint(eager=True)
     )
     w_risk = W.orderBy("t_days").rowsBetween(W.currentRow, W.unboundedFollowing)
     w_cum = W.orderBy("t_days").rowsBetween(W.unboundedPreceding, 0)
@@ -1042,7 +1041,7 @@ def brown_forsythe_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("B")
         .alias("arm"),
         "c",
-    ).localCheckpoint(eager=True)  # read by the median pass and the z pass
+    )
     from data_warehouse_data_mining_spark.operators.relational import (
         exact_group_percentiles,
     )

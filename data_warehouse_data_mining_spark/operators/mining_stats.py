@@ -92,8 +92,6 @@ def neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(cents).cast("long").alias("s"),
             F.sum(cents * cents).cast("long").alias("ss"),
         )
-        # strata-sized; weight, total-weight and ranking all read it
-        .localCheckpoint(eager=True)
     )
     wt = (
         F.sqrt(
@@ -116,7 +114,7 @@ def neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "quota",
         F.floor("quota").cast("long").alias("base"),
         (F.col("quota") - F.floor("quota")).alias("rem"),
-    ).localCheckpoint(eager=True)
+    )
     short = fl.agg(
         (F.lit(_NEYMAN_BUDGET) - F.sum("base").cast("long")).alias("k")
     )
@@ -222,8 +220,6 @@ def ab_interim_monitoring(spark: SparkSession, sf_dir: str) -> DataFrame:
             "first_ts",
             "conv_ts",
         )
-        # user-count sized; all three looks read it
-        .localCheckpoint(eager=True)
     )
     rows = None
     for i, (cut, bound) in enumerate(zip(_LOOK_CUTS, _OBF_BOUNDS)):
@@ -666,7 +662,6 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = (
         e.groupBy("user_id")
         .agg(F.sum(cents).cast("long").alias("c"))
-        .localCheckpoint(eager=True)
     )
     reps = per_user.withColumn(
         "b", F.explode(F.array(*[F.lit(b) for b in range(BOOTSTRAP_B)]))
@@ -886,9 +881,7 @@ def mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("arm") == "A", 1).otherwise(0))
         .cast("long")
         .alias("cnt_a"),
-    ).localCheckpoint(eager=True)  # bounded distinct-value table; the
-    # two-phase ranking reads it several times — pin it so the events
-    # fact table is scanned exactly once
+    )
     from data_warehouse_data_mining_spark.operators.ranking import (
         global_order_stats,
     )
@@ -1817,7 +1810,6 @@ def kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("rev"),
         )
-        .localCheckpoint(eager=True)
     )
     a = daily.select(
         F.col("day").alias("d1"), F.col("n").alias("n1"), F.col("rev").alias("r1")
@@ -1938,7 +1930,6 @@ def durbin_watson_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("y")
         )
-        .localCheckpoint(eager=True)
     )
     m = daily.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -2698,7 +2689,6 @@ def spearman_rho_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " AS BIGINT)"
             ).alias("y"),
         )
-        .localCheckpoint(eager=True)  # days-sized, read by both rankings
     )
     ranked = daily.select(
         (
@@ -3275,7 +3265,6 @@ def kulldorff_temporal_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     monthly = (
         o.groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("month"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=True)
     )
     wseq = W.orderBy("month").rowsBetween(W.unboundedPreceding, 0)
     seq = monthly.select(
@@ -3283,7 +3272,7 @@ def kulldorff_temporal_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c",
         F.row_number().over(W.orderBy("month")).cast("long").alias("rn"),
         F.sum("c").over(wseq).cast("long").alias("cum"),
-    ).localCheckpoint(eager=True)  # months-sized, read by both join sides
+    )
     tot = seq.agg(
         F.max("cum").cast("long").alias("ctot"),
         F.max("rn").cast("long").alias("m"),

@@ -615,13 +615,10 @@ def benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     digit = F.floor(
         F.col("o_totalprice") / F.pow(F.lit(10.0), F.floor(F.log10("o_totalprice")))
     ).cast("int")
-    # 9-row digit histogram; checkpoint so the total and the final
-    # projection don't each re-scan orders.
     counts = (
         o.select(digit.alias("digit"))
         .groupBy("digit")
         .agg(F.count(F.lit(1)).alias("n_obs"))
-        .localCheckpoint(eager=True)
     )
     tot = counts.agg(F.sum("n_obs").alias("t"))
     exp = F.col("t") * F.log10(1 + 1.0 / F.col("digit"))
@@ -759,8 +756,6 @@ def compaction_bin_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     target) reproduces greedy first-fit for sequential packing
     exactly, in one windowed expression instead of a driver loop."""
     li = load(spark, sf_dir).lineitem
-    # files-sized manifest (~84 rows); checkpoint so target derivation
-    # and the packing window don't each re-scan lineitem.
     slices = (
         li.groupBy(
             (F.year("l_shipdate") * 100 + F.month("l_shipdate"))
@@ -768,7 +763,6 @@ def compaction_bin_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("slice_id")
         )
         .agg((F.count(F.lit(1)) * 100).alias("bytes"))
-        .localCheckpoint(eager=True)
     )
     tot = slices.agg(F.ceil(F.sum("bytes") / 6.0).alias("target"))
     w = W.orderBy("slice_id").rowsBetween(W.unboundedPreceding, -1)
@@ -2021,8 +2015,8 @@ def fellegi_sunter_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment",
         *[f"{_FS_EXPRS[f]} AS {f}" for f, _m in FS_FIELDS],
     ).localCheckpoint(eager=True)
-    # ^ narrow staged record table (7 small cols/row — the grid_lof
-    # staged-model-table precedent): the u-estimation, the N count and
+    # ^ narrow staged record table (7 small cols/row): the
+    # u-estimation, the N count and
     # BOTH pair-join sides otherwise re-scan customer 14x (plan audit)
     # one-pass u-estimation: stack the 4 fields into (field, value)
     # rows, count per value, then sum c*(c-1) per field and pivot back

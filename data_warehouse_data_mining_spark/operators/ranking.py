@@ -814,8 +814,6 @@ def gini_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("spend_c")
         )
-        # (year, customer)-sized; window + bucket-stats branches share it
-        .localCheckpoint(eager=True)
     )
     ranked = global_order_stats(
         s, "spend_c", "o_custkey", ascending=True, partition_cols=["yr"]

@@ -3025,12 +3025,6 @@ def grid_lof_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(LOF_R2),
             ).alias("kdist2"),
         )
-        # staged: kd is a NARROW per-point fit artifact (id, count,
-        # kdist² — 24 B/point, the LOF analogue of a model table) that
-        # every later stage re-joins; without the pin each of its four
-        # consumers re-derives the full grid join and the plan degrades
-        # to 16 corpus scans (r10 plan-audit catch)
-        .localCheckpoint(eager=True)
     )
     kdr = kd.select(
         F.col("id_p").alias("kd_id"), "n_within_r", "kdist2"
@@ -3059,9 +3053,6 @@ def grid_lof_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(sum(reach_micro) AS BIGINT)"
             ).alias("lrd_micro"),
         )
-        # staged for the same reason as kd: consumed twice (own lrd +
-        # neighbors' lrd) and each re-derivation costs the whole chain
-        .localCheckpoint(eager=True)
     )
     lo = lrd.select(
         F.col("id_p").alias("id_o"), F.col("lrd_micro").alias("lrd_micro_o")

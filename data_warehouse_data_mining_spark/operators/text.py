@@ -841,15 +841,13 @@ def bm25_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     flip on a last-ulp tie."""
     d = load(spark, sf_dir).documents
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
-    # doc-sized (one row per document, << corpus); checkpoint so the
-    # corpus-stats regroup and the scorer don't each re-tokenize.
     dl = tok.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("dl"),
         *[
             F.sum(F.when(F.col("w") == t, 1).otherwise(0)).alias(f"tf_{t}")
             for t in _BM25_TERMS
         ],
-    ).localCheckpoint(eager=True)
+    )
     stats = dl.agg(
         (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
         F.count(F.lit(1)).alias("n_docs"),
@@ -957,7 +955,7 @@ def mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     flattening the head entirely.
 
     One scan to language counts; Z = Σ n^α is a 5-term regroup of the
-    tiny count table (checkpointed), each share is exact-count-derived
+    tiny count table, each share is exact-count-derived
     with one pow/division chain per row, and the boost column makes
     the up/down-sampling auditable (boost > 1 ⇔ below-average-size
     language)."""
@@ -965,7 +963,6 @@ def mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = (
         d.groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n_docs"))
-        .localCheckpoint(eager=True)
     )
     tots = counts.agg(
         F.sum("n_docs").alias("n_tot"),
@@ -1356,10 +1353,6 @@ def zipf_slope_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select(F.explode(F.split("text", " ")).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
-        # vocabulary-sized; the ranking helper's window + bucket-stats
-        # branches re-read their input — materialize once instead of
-        # re-tokenizing the corpus per branch (plan audit: 3 scans -> 0)
-        .localCheckpoint(eager=True)
     )
     ranked = global_order_stats(vocab, "freq", "w", ascending=False)
     pts = ranked.filter(F.col("global_rank") <= ZIPF_TOP).select(
@@ -1525,7 +1518,7 @@ def quality_filter_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("n_distinct") * 2 <= F.col("n_tokens"), 1)
         .otherwise(0)
         .alias("f_rep"),
-    ).localCheckpoint(eager=True)
+    )
     t = flags.agg(F.count(F.lit(1)).alias("total"))
     return (
         flags.crossJoin(F.broadcast(t))
@@ -1605,8 +1598,6 @@ def tokenize_to_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     freq = (
         tok.groupBy("tokn")
         .agg(F.count(F.lit(1)).alias("f"))
-        # vocab-sized; the ranking helper's branches share it
-        .localCheckpoint(eager=True)
     )
     vocab = (
         global_order_stats(freq, "f", "tokn", ascending=False)
@@ -2083,7 +2074,7 @@ def filter_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.greatest("fs", "fr")).cast("long").alias("v_sr"),
         F.sum(F.greatest("ft", "fr")).cast("long").alias("v_tr"),
         F.sum(F.greatest("fs", "ft", "fr")).cast("long").alias("v_str"),
-    ).localCheckpoint(eager=True)
+    )
     rows = []
     specs = [
         ("short", "v_s", ("v_st", "v_t"), ("v_sr", "v_r"), "v_tr"),
@@ -2556,10 +2547,6 @@ def good_turing_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     fof = (
         counts.groupBy(F.col("c").alias("r"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_r"))
-        # frequency-of-frequencies: bounded by the max trigram count —
-        # pinning it makes the trigram-type table single-consumer, so
-        # the corpus is tokenized exactly once (N = sum r*n_r below)
-        .localCheckpoint(eager=True)
     )
     tot = fof.agg(
         F.sum(F.col("r") * F.col("n_r")).cast("long").alias("n")

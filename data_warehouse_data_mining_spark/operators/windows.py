@@ -392,12 +392,9 @@ def seasonal_decompose_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical results; residual subtracts the ROUNDED trend and
     seasonal so it re-derives exactly from the published columns."""
     e = load(spark, sf_dir).events
-    # days-sized; checkpoint so the seasonal regroup and the final join
-    # don't each re-scan events.
     daily = (
         e.groupBy(F.to_date("ts").alias("day"))
         .agg(F.count(F.lit(1)).alias("n_events"))
-        .localCheckpoint(eager=True)
     )
     w = W.orderBy("day").rowsBetween(-3, 3)
     win = daily.select(

@@ -388,7 +388,7 @@ def daily_kpi_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     refreshes nightly, here hash-checked end to end.
 
     One scan per source table: events reduce to a (day, user) pre-
-    aggregate (materialized once) that feeds both the per-day rollup
+    aggregate that feeds both the per-day rollup
     AND the first-seen-day window that marks new users; orders reduce
     to exact day cents. The two day-grain sides meet in a full-outer
     join (day cardinality — tiny at any scale), so event-less revenue
@@ -400,9 +400,8 @@ def daily_kpi_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load(spark, sf_dir).events
     o = load(spark, sf_dir).orders
-    # (day, user) grain + first-seen flag shared with new_vs_returning;
-    # checkpointed because the rollup and the window both consume it
-    flagged = day_user_activity(e, checkpoint=True)
+    # (day, user) grain + first-seen flag shared with new_vs_returning
+    flagged = day_user_activity(e)
     ev = flagged.groupBy("day").agg(
         F.count(F.lit(1)).alias("n_active"),
         F.sum("is_new").cast("long").alias("n_new"),

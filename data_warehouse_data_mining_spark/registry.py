@@ -53,7 +53,7 @@ def register(
     return deco
 
 
-def _driver_history() -> tuple[frozenset[str], tuple[str, ...], frozenset[str]]:
+def _driver_history() -> tuple[frozenset[str], tuple[str, ...]]:
     """Derive sweep-ordering state from the in-repo driver artifacts.
 
     Reads every ``CORRECTNESS_r*.json`` at the repo root (the driver's
@@ -64,11 +64,13 @@ def _driver_history() -> tuple[frozenset[str], tuple[str, ...], frozenset[str]]:
       (exact hash match, or a by-design rows-only run recorded as
       ``err == "no_oracle"``). These already carry a hard-signal row, so
       a capped sweep should spend its budget elsewhere.
-    * ``red_at_latest`` — names whose latest row errored or mismatched.
-      These sort immediately after the headliners so an already-landed
-      fix converts into a green hard-signal row next round (a frozen
-      hand-typed set previously filed red rows under "seen", which
-      deprioritized exactly the names that most needed a re-check).
+    * ``red_at_latest`` — names whose latest row errored or mismatched,
+      then the ``recheck_requests`` names whose latest row predates the
+      round they name. These sort immediately after the headliners so
+      an already-landed fix converts into a green hard-signal row next
+      round (a frozen hand-typed set previously filed red rows under
+      "seen", which deprioritized exactly the names that most needed a
+      re-check).
 
     Never-checked names are in neither set and keep their place in the
     fresh round-robin queue.
@@ -103,9 +105,6 @@ def _driver_history() -> tuple[frozenset[str], tuple[str, ...], frozenset[str]]:
 
     reds = tuple(sorted(n for n, rec in last.items() if is_red(rec)))
     greens = frozenset(n for n, rec in last.items() if not is_red(rec))
-    rows_only = frozenset(
-        n for n, rec in last.items() if rec.get("err") == "no_oracle"
-    )
     # One-round recheck requests: names whose local test pins were
     # materially tightened in round N, so their pre-N driver greens no
     # longer prove the CURRENT assertion under the driver's JVM/BLAS.
@@ -179,15 +178,13 @@ def _driver_history() -> tuple[frozenset[str], tuple[str, ...], frozenset[str]]:
         )
     )
     reds = reds + tuple(n for n in stale if n not in reds)
-    return greens, reds, rows_only
+    return greens, reds
 
 
-# Names with a hard-signal green row at their latest driver check,
+# Names with a hard-signal green row at their latest driver check, and
 # names red at their latest check (re-verified immediately after the
-# headliners), and names whose latest check was the weaker rows-only
-# form (re-queued as fresh if they have since gained an oracle). All
-# derived from CORRECTNESS_r*.json — never hand-typed.
-_SEEN_IN_DRIVER_ROUNDS, _RECHECK_FIRST, _ROWS_ONLY_AT_LATEST = _driver_history()
+# headliners). Both derived from CORRECTNESS_r*.json — never hand-typed.
+_SEEN_IN_DRIVER_ROUNDS, _RECHECK_FIRST = _driver_history()
 
 
 def all_queries() -> dict[str, Query]:
@@ -225,19 +222,9 @@ def all_queries() -> dict[str, Query]:
             out.extend(q for q in wave if q is not None)
         return out
 
-    def is_seen(q: Query) -> bool:
-        # a latest driver row that was the weaker rows-only check predates
-        # the query's oracle (r5: FPGrowth/PrefixSpan/CV-grid conversions)
-        # — re-queue it as fresh so the exact hash row lands instead of
-        # waiting behind every green
-        return (
-            q.name in _SEEN_IN_DRIVER_ROUNDS
-            and q.name not in _ROWS_ONLY_AT_LATEST
-        )
-
     rest = [q for q in _REGISTRY.values() if q.name not in pinned_names]
-    fresh = round_robin([q for q in rest if not is_seen(q)])
-    seen = round_robin([q for q in rest if is_seen(q)])
+    fresh = round_robin([q for q in rest if q.name not in _SEEN_IN_DRIVER_ROUNDS])
+    seen = round_robin([q for q in rest if q.name in _SEEN_IN_DRIVER_ROUNDS])
     ordered = pinned + fresh + seen
     return {q.name: q for q in ordered}
 

@@ -13,7 +13,8 @@ side-by-side at a given SF.
 
 Usage: python tools/driver_sweep.py [sf_dir] [--only name1,name2] [--master=local[N]] [--shuffle=P]
 Prints one status line per query and a final summary; exit 1 on any
-mismatch/error.
+mismatch/error, exit 2 (before Spark starts) when an --only name is not
+registered.
 """
 
 from __future__ import annotations
@@ -160,6 +161,12 @@ def main() -> int:
     spec = importlib.util.spec_from_file_location("__spark_entry__", os.path.join(os.path.dirname(__file__), "..", "__spark_entry__.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
+    queries = mod.queries()
+    unknown = sorted((only or set()) - set(queries))
+    if unknown:
+        # a misspelled name would otherwise sweep nothing and exit 0
+        print(f"--only names not registered: {unknown}", file=sys.stderr)
+        return 2
 
     from pyspark.sql import SparkSession
 
@@ -172,7 +179,6 @@ def main() -> int:
     )
 
     con = duckdb_views(sf_dir)
-    queries = mod.queries()
     oracles = mod.oracle_sql()
     n_pass = n_rowsonly = n_fail = n_err = 0
     t_start = time.time()

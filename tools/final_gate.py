@@ -11,8 +11,9 @@ Checks (all static/AST or sub-minute — no registry bind, no Spark):
   3. coverage_state      — COVERAGE.md state block matches the registry
   4. registry integrity  — every query has an oracle; imports clean
   5. docs/lint pytest    — tests/test_docs.py + the AST-level plan
-                           lints + the oracle canon's own tests (the
-                           subset that needs no Spark bind)
+                           lints + the oracle canon's own tests + the
+                           sweep's --only name check (the subset that
+                           needs no Spark bind)
   6. git cleanliness     — warns (not fails) on uncommitted changes so
                            "green at HEAD" means the actual HEAD
 
@@ -91,6 +92,8 @@ def _pytest_fast():
             + "::test_canon_distinguishes_decimal_from_double",
             os.path.join(REPO, "tests", "test_oracle_types.py")
             + "::test_compare_rejects_boolean_against_integer",
+            os.path.join(REPO, "tests", "test_bench.py")
+            + "::test_driver_sweep_unknown_only_name_exits_before_spark",
             "-p", "no:cacheprovider",
         ],
         capture_output=True, text=True, cwd=REPO,
