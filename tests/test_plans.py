@@ -304,7 +304,7 @@ def test_bounded_model_recurrences_run_in_one_task(spark):
 # Builders that return a plan: no eager cut, no driver scalar, so
 # building them schedules no Spark job. markov and ucb1 are the
 # bounded-state iterative queries; the rest dropped eager cuts that
-# measured as pure overhead (no faster, no fewer parquet scans).
+# bought neither speed nor fewer parquet scans.
 PLAN_ONLY_BUILDERS = (
     "markov_stationary_distribution",
     "ucb1_bandit_replay",
