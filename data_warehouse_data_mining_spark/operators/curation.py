@@ -1076,8 +1076,8 @@ def knapsack_doc_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         global_order_stats,
     )
 
-    # narrow per-doc table (4 longs/row): the two two-phase cumsum calls otherwise re-derive
-    # the tokenizing projection 15x (plan-audit r10)
+    # narrow per-doc table (4 longs/row): the two two-phase cumsum calls
+    # otherwise re-derive the tokenizing projection 15x (plan-audit r10)
     docs = (
         d.select(
             "doc_id",

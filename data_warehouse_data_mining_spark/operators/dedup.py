@@ -2316,8 +2316,8 @@ def edit_distance_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: grams explode map-side from a 2-column pruned scan;
     the df-rank mapping is vocab-bounded (<= alphabet^{ED_Q}); the
-    candidate join touches only {ED_PLEN} grams per
-    document with the length filter in the join condition; per-pair
+    candidate join touches only {ED_PLEN} grams per document with the
+    length filter in the join condition; per-pair
     verification cost is bounded by the {ED_LEAD}-char fingerprint
     ({ED_LEAD}x{ED_LEAD} banded DP), never document length."""
     from data_warehouse_data_mining_spark.operators.ranking import (

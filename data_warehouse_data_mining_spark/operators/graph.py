@@ -987,8 +987,7 @@ def adamic_adar_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangle count documents. Existing edges are removed by an
     anti-join, never materializing the non-edge complement."""
     # narrow staged edge table (2 longs/row, catalog-pair-sized):
-    # sym/deg/wedge/anti-join
-    # otherwise re-derive the basket self-join 7x
+    # sym/deg/wedge/anti-join otherwise re-derive the basket self-join 7x
     e = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
     sym = e.select(F.col("lo").alias("a"), F.col("hi").alias("b")).unionAll(
         e.select(F.col("hi").alias("a"), F.col("lo").alias("b"))

@@ -2016,8 +2016,8 @@ def fellegi_sunter_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[f"{_FS_EXPRS[f]} AS {f}" for f, _m in FS_FIELDS],
     ).localCheckpoint(eager=True)
     # ^ narrow staged record table (7 small cols/row): the
-    # u-estimation, the N count and
-    # BOTH pair-join sides otherwise re-scan customer 14x (plan audit)
+    # u-estimation, the N count and BOTH pair-join sides otherwise
+    # re-scan customer 14x (plan audit)
     # one-pass u-estimation: stack the 4 fields into (field, value)
     # rows, count per value, then sum c*(c-1) per field and pivot back
     stack_expr = ", ".join(
