@@ -90,9 +90,9 @@ def _prior_mins(sf_label: str) -> dict[str, float]:
     dedup_minhash/dsir/tfidf), so without the guard the 8-core mins
     (dsir 0.83, dedup_minhash 0.871) became unreachable "best priors"
     for every 32-core run and the gate flagged permanent false
-    regressions. Records whose wrapper lacks a cpus field (this
-    bench's own stdout line has none) are assumed comparable; old
-    numbers stay in the BENCH_r* history untouched."""
+    regressions. A record's own line's cpus wins over its wrapper's;
+    records with neither are assumed comparable; old numbers stay in
+    the BENCH_r* history untouched."""
     import glob
 
     best: dict[str, float] = {}
@@ -102,12 +102,13 @@ def _prior_mins(sf_label: str) -> dict[str, float]:
                 rec = json.load(f)
         except (OSError, json.JSONDecodeError):
             continue
-        rec_cpus = rec.get("cpus")
-        if rec_cpus is not None and str(rec_cpus) != str(CPUS):
-            continue
+        wrapper_cpus = rec.get("cpus")
         # the external driver records bench output wrapped under "parsed"
         if isinstance(rec.get("parsed"), dict):
             rec = rec["parsed"]
+        rec_cpus = rec.get("cpus", wrapper_cpus)
+        if rec_cpus is not None and str(rec_cpus) != str(CPUS):
+            continue
         if str(rec.get("sf")) != sf_label:
             continue
         # strictly min-vs-min: rounds predating "queries_min" recorded
@@ -284,6 +285,8 @@ def main() -> None:
                 "cotenancy_noise_median_spread": noise,
                 "busy_at_start": preflight["busy_at_start"],
                 "sf": float(sf_label) if sf_label.replace(".", "").isdigit() else sf_label,
+                "cpus": int(CPUS) if CPUS.isdigit() else CPUS,
+                "nproc": os.cpu_count(),
             }
         )
     )

@@ -52,3 +52,21 @@ def test_driver_sweep_unknown_only_name_exits_before_spark():
     assert "no_such_query" in p.stderr
     assert "pricing_summary" not in p.stderr
     assert p.stdout == ""
+
+
+def test_prior_mins_prefer_the_line_cpus(tmp_path, monkeypatch):
+    """A bench line's own ``cpus`` wins over its wrapper's: an 8-core
+    line filed in a wrapper that says 32 is no floor for a 32-core run;
+    a line without one falls back to the wrapper's."""
+    import json
+
+    monkeypatch.syspath_prepend(REPO)
+    import bench
+
+    monkeypatch.setattr(bench, "REPO", str(tmp_path))
+    monkeypatch.setattr(bench, "CPUS", "32")
+    line = {"sf": 0.1, "queries_min": {"q": 1.0}, "cpus": 8}
+    (tmp_path / "BENCH_r01.json").write_text(json.dumps({"cpus": 32, "parsed": line}))
+    line = {"sf": 0.1, "queries_min": {"q": 2.0}}
+    (tmp_path / "BENCH_r02.json").write_text(json.dumps({"cpus": 32, "parsed": line}))
+    assert bench._prior_mins("0.1") == {"q": 2.0}

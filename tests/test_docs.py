@@ -41,10 +41,32 @@ def test_coverage_state_tolerates_newer_driver_sweep():
     assert not ok2 and "missing" in msg2
 
 
+def test_coverage_state_fails_when_digests_lack_a_driver_round(
+    tmp_path, monkeypatch
+):
+    """DRIVER_DIGESTS.json orders the driver's re-check queue, so a
+    driver round it does not cover must redden the check: seed a copy
+    with the newest round dropped."""
+    import json
+
+    import tools.coverage_state as cs
+
+    with open(cs.DIGESTS) as fh:
+        recorded = json.load(fh)
+    dropped = recorded["rounds"].pop()
+    seeded = tmp_path / "DRIVER_DIGESTS.json"
+    seeded.write_text(json.dumps(recorded))
+    monkeypatch.setattr(cs, "DIGESTS", str(seeded))
+    with open(os.path.join(cs.REPO, "COVERAGE.md")) as fh:
+        ok, msg = cs.check_block(fh.read())
+    assert not ok and dropped in msg
+
+
 def test_registry_count_matches_doc():
-    """The headline claim in the generated block — total query count and
-    zero-rows-only — re-derived here so a registry regression (a query
-    losing its oracle) is caught even if someone regenerates the doc."""
+    """The headline claim in the generated block — total query count, each
+    query with an oracle — re-derived here so a registry regression (a
+    query losing its oracle) is caught even if someone regenerates the
+    doc."""
     from data_warehouse_data_mining_spark.registry import all_queries
 
     qs = all_queries()

@@ -92,3 +92,58 @@ def test_money_sum_paths_agree(spark):
     )
     rows = out.collect()
     assert rows and all(r.dec == r.fast for r in rows)
+
+
+def test_edited_builder_joins_driver_recheck_group(tmp_path):
+    """A green builder edited since its driver check is re-verified right
+    after the headliners; an unedited green one stays in the green pool.
+    The edit is made in a copy of the package, whose registry is imported
+    in a subprocess (no Spark session)."""
+    import ast
+    import json
+    import shutil
+    import subprocess
+
+    from data_warehouse_data_mining_spark import registry
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = "data_warehouse_data_mining_spark"
+    shutil.copytree(
+        os.path.join(repo, pkg), tmp_path / pkg,
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    shutil.copy(os.path.join(repo, "DRIVER_DIGESTS.json"), tmp_path)
+
+    qs = registry.all_queries()
+    green, recheck = registry._ensure_loaded()
+    pool = [n for n in qs if n in green and not qs[n].headline]
+    edited, kept = pool[0], pool[-1]
+    fn = qs[edited].builder
+    path = tmp_path / os.path.relpath(sys.modules[fn.__module__].__file__, repo)
+    lines = path.read_text().splitlines(keepends=True)
+    node = next(
+        n for n in ast.parse("".join(lines)).body
+        if isinstance(n, ast.FunctionDef) and n.name == fn.__name__
+    )
+    lines.insert(node.end_lineno, " " * node.body[-1].col_offset + "_ = None\n")
+    path.write_text("".join(lines))
+
+    probe = (
+        "import json\n"
+        "from data_warehouse_data_mining_spark.registry import all_queries\n"
+        "print(json.dumps(list(all_queries())))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=tmp_path, check=True,
+        env={**os.environ, "PYTHONPATH": str(tmp_path)},
+        capture_output=True, text=True,
+    )
+    order = json.loads(out.stdout.splitlines()[-1])
+
+    # headliners keep registration order, which depends on which modules
+    # this process imported first; the re-check group is sorted by name
+    head = {n for n in qs if qs[n].headline and n not in green}
+    recheck = [n for n in sorted({n for n in recheck if n in qs} | {edited}) if n not in head]
+    assert set(order[: len(head)]) == head
+    assert order[len(head) : len(head) + len(recheck)] == recheck
+    assert kept in order[len(head) + len(recheck) :]

@@ -8,12 +8,12 @@ Checks (all static/AST or sub-minute — no registry bind, no Spark):
   1. broadcast_lint      — no F.broadcast() on SF-proportional lineage
   2. token-pin lint      — no .persist/.cache/.localCheckpoint on
                            token-proportional tables (test_plans rule)
-  3. coverage_state      — COVERAGE.md state block matches the registry
+  3. coverage_state      — COVERAGE.md block and DRIVER_DIGESTS.json current
   4. registry integrity  — every query has an oracle; imports clean
   5. docs/lint pytest    — tests/test_docs.py + the AST-level plan
                            lints + the oracle canon's own tests + the
-                           sweep's --only name check (the subset that
-                           needs no Spark bind)
+                           sweep's --only name check + the re-check
+                           order (the subset that needs no Spark bind)
   6. git cleanliness     — warns (not fails) on uncommitted changes so
                            "green at HEAD" means the actual HEAD
 
@@ -94,6 +94,8 @@ def _pytest_fast():
             + "::test_compare_rejects_boolean_against_integer",
             os.path.join(REPO, "tests", "test_bench.py")
             + "::test_driver_sweep_unknown_only_name_exits_before_spark",
+            os.path.join(REPO, "tests", "test_entry.py")
+            + "::test_edited_builder_joins_driver_recheck_group",
             "-p", "no:cacheprovider",
         ],
         capture_output=True, text=True, cwd=REPO,
