@@ -128,11 +128,12 @@ def _force(df) -> None:
 
 def _preflight_load() -> dict:
     """Machine-state snapshot BEFORE the JVM starts: 1/5/15-min loadavg
-    and cpu count. r2 and r7 both burned a round's bench signal
+    and ``nproc`` (``os.cpu_count()``; the JSON line's ``cpus`` is the
+    ``local[N]`` count). r2 and r7 both burned a round's bench signal
     adjudicating co-tenancy after the fact; recording the load at
     measurement time makes a noisy round machine-attributed in the
     BENCH json itself. `busy_at_start` flags 1-min loadavg above half
-    the cpus — on that start, treat the medians as unusable and the
+    of nproc — on that start, treat the medians as unusable and the
     mins as suspect."""
     try:
         la1, la5, la15 = os.getloadavg()
@@ -143,7 +144,7 @@ def _preflight_load() -> dict:
         "loadavg_1m": round(la1, 2),
         "loadavg_5m": round(la5, 2),
         "loadavg_15m": round(la15, 2),
-        "cpus": ncpu,
+        "nproc": ncpu,
         "busy_at_start": la1 > ncpu / 2,
     }
 
@@ -171,7 +172,7 @@ def main() -> None:
     if preflight["busy_at_start"]:
         print(
             f"# WARNING: 1-min loadavg {preflight['loadavg_1m']} > "
-            f"{preflight['cpus']}/2 cpus at bench start — co-tenant "
+            f"{preflight['nproc']}/2 nproc at bench start — co-tenant "
             "active; medians unusable, mins suspect",
             file=sys.stderr,
         )

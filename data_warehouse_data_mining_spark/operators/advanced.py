@@ -759,8 +759,8 @@ def recursive_cte_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursion step is one join of the frontier against the child table —
     at scale the frontier stays small relative to the table and the
     engine checkpoints it per step; Spark executes the same plan shape
-    as the driver-side loop in neardup_clusters' connected components,
-    but declaratively.
+    as the driver-side loop in graph.min_labels (neardup_clusters'
+    connected components), but declaratively.
     """
     cat = load(spark, sf_dir)
     cat.register_views()

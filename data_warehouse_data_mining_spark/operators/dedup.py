@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from data_warehouse_data_mining_spark.catalog import load
 from data_warehouse_data_mining_spark.functions import texthash as th
-from data_warehouse_data_mining_spark.operators.iterate import iterate
+from data_warehouse_data_mining_spark.operators.graph import _directed, min_labels
 from data_warehouse_data_mining_spark.registry import register
 
 NUM_HASHES = 16
@@ -696,64 +696,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def connected_components(
-    edges: DataFrame, max_iters: int = 20
-) -> DataFrame:
-    """Connected components by iterative min-label propagation:
-    (node, component) where component = min node id reachable.
-
-    Each iteration is one shuffle join + aggregate; the loop stops as
-    soon as labels are stable. Dedup pair-graphs are shallow (clusters
-    of copies), so convergence is fast; ``max_iters`` bounds adversarial
-    chains. The classic alternating big-star/small-star optimization
-    drops in here if components get deep at 100 TB.
-    """
-    # The edge table is consumed once per iteration and everything
-    # upstream (the whole LSH candidate pipeline) would otherwise be
-    # recomputed each time. localCheckpoint (not persist) both
-    # materializes it AND truncates the logical plan, so each
-    # iteration's plan is one join over a leaf — with persist the
-    # optimizer still re-plans the full per-iteration-growing lineage
-    # (the r2 plan audit counted 4,788 codegen ops here). The label
-    # vector's lineage is cut every superstep by ``iterate``.
-    bi = (
-        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        bi.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("lbl", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-
-    def superstep(labels: DataFrame, _: int) -> DataFrame:
-        neighbor_min = (
-            bi.join(labels, bi["src"] == labels["node"])
-            .groupBy(F.col("dst").alias("node2"))
-            .agg(F.min("lbl").alias("nlbl"))
-        )
-        return labels.join(
-            neighbor_min, labels["node"] == F.col("node2"), "left"
-        ).select(
-            "node",
-            F.least(F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))).alias(
-                "lbl"
-            ),
-        )
-
-    def stable(old: DataFrame, new: DataFrame) -> bool:
-        return (
-            new.alias("n")
-            .join(old.alias("o"), "node")
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-            .count()
-            == 0
-        )
-
-    labels = iterate(labels, superstep, max_iters, cut_every=1, until=stable)
-    return labels.select("node", F.col("lbl").alias("component"))
+CC_MAX_ITERS = 20  # dedup pair graphs are shallow; bounds adversarial chains
 
 
 # Shared recursive-CTE chain: LSH candidates → verified pairs →
@@ -807,13 +750,18 @@ _ORACLE_CLUSTERS_PREFIX = (
 )
 def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate CLUSTERS: connected components over the MinHash-LSH
-    pair graph (generic: connected_components). The oracle mirrors the
-    iterative Spark loop with a recursive CTE — same fixpoint, so the
-    results hash-match. Output: (doc_id, cluster_id) for every doc in a
-    near-dup cluster of size ≥ 2."""
+    pair graph (generic: graph.min_labels run to its fixpoint). The
+    oracle mirrors the iterative Spark loop with a recursive CTE — same
+    fixpoint, so the results hash-match. Output: (doc_id, cluster_id)
+    for every doc in a near-dup cluster of size ≥ 2."""
     pairs = near_duplicate_pairs(load(spark, sf_dir).documents, "doc_id", "text")
-    return connected_components(pairs.select("id_a", "id_b")).select(
-        F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
+    # every superstep joins the edge list, which would otherwise
+    # recompute the whole LSH candidate pipeline each time
+    edges = _directed(
+        pairs.select(F.col("id_a").alias("lo"), F.col("id_b").alias("hi"))
+    ).localCheckpoint(eager=True)
+    return min_labels(edges, CC_MAX_ITERS, to_fixpoint=True).select(
+        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
 
 
@@ -850,12 +798,7 @@ def dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-ready equi-join, and the canonical rank is a window over
     per-cluster groups — no global sort."""
     d = load(spark, sf_dir).documents
-    pairs = near_duplicate_pairs(d, "doc_id", "text")
-    clusters = connected_components(pairs.select("id_a", "id_b")).select(
-        F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
-    )
-    from pyspark.sql import Window as W
-
+    clusters = neardup_clusters(spark, sf_dir)
     ranked = clusters.join(d.select("doc_id", "n_chars"), "doc_id").withColumn(
         "rn",
         F.row_number().over(

@@ -7,7 +7,10 @@ PageRank and personalized PageRank over the supplier↔part co-supply
 graph; triangles, degrees, label propagation, modularity, k-core, BFS
 and Adamic-Adar over the part co-purchase graph. Every superstep loop
 runs through ``operators.iterate.iterate``, which owns lineage
-truncation; connected components lives in operators/dedup.py.
+truncation. ``min_labels`` is the one min-label superstep: label
+propagation and modularity run it a fixed number of times,
+operators/dedup.py's near-duplicate clusters run it to its fixpoint
+(connected components).
 
 Determinism contract: ranks are kept in integer fixed-point (1e12
 units) with floor division, so every engine computes bit-identical
@@ -355,12 +358,22 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 LP_ITER = 5
 
 
-def _min_labels(edges: DataFrame) -> DataFrame:
-    """``(node, label)`` after LP_ITER synchronized min-label supersteps
-    over the directed edge list ``(src, dst)``: every node starts with
-    its own id and each superstep adopts the minimum of its own and its
+def min_labels(
+    edges: DataFrame, max_iters: int, to_fixpoint: bool = False
+) -> DataFrame:
+    """``(node, label)`` by synchronized min-label supersteps over the
+    directed edge list ``(src, dst)``: every src node starts with its own
+    id and each superstep adopts the minimum of its own and its
     neighbors' labels — one edges⋈labels join plus one min-aggregation,
-    the Pregel message pattern. Lineage is cut every 2 supersteps."""
+    the Pregel message pattern. After k supersteps a node holds the
+    smallest id within k hops.
+
+    The fixed mode runs ``max_iters`` supersteps and cuts lineage every
+    2. ``to_fixpoint`` stops at the first superstep that changes no
+    label (connected components; ``max_iters`` bounds adversarial
+    chains). Its stability count reads every superstep, so that mode
+    cuts every superstep. The alternating big-star/small-star
+    optimization drops in here if components get deep at 100 TB."""
 
     def superstep(labels: DataFrame, _: int) -> DataFrame:
         nbr_min = (
@@ -377,20 +390,27 @@ def _min_labels(edges: DataFrame) -> DataFrame:
             "node", F.least("label", "nbr").alias("label")
         )
 
+    def stable(old: DataFrame, new: DataFrame) -> bool:
+        changed = new.alias("n").join(old.alias("o"), "node").filter(
+            F.col("n.label") != F.col("o.label")
+        )
+        return changed.count() == 0
+
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").cast("long").alias("label")
     )
-    return iterate(labels, superstep, LP_ITER, cut_every=2)
+    if to_fixpoint:
+        return iterate(labels, superstep, max_iters, cut_every=1, until=stable)
+    return iterate(labels, superstep, max_iters, cut_every=2)
 
 
-def _label_prop_oracle() -> str:
-    """Unroll the synchronized min-label iterations as chained CTEs
-    (same reason as the PageRank oracle: recursive SQL can't
-    re-aggregate per iteration)."""
-    steps = []
-    for i in range(LP_ITER):
-        steps.append(
-            f"""l{i + 1} AS MATERIALIZED (
+def _lp_unroll() -> str:
+    """The LP_ITER synchronized min-label supersteps as chained CTEs
+    ``l1`` … ``l{LP_ITER}`` over ``l0`` and ``edges`` (same reason as
+    the PageRank oracle: recursive SQL can't re-aggregate per
+    iteration)."""
+    return ",\n    ".join(
+        f"""l{i + 1} AS MATERIALIZED (
       SELECT l.node AS node,
              CAST(least(l.label, min(nl.label)) AS BIGINT) AS label
       FROM l{i} l
@@ -398,8 +418,12 @@ def _label_prop_oracle() -> str:
       JOIN l{i} nl ON nl.node = e.dst
       GROUP BY l.node, l.label
     )"""
-        )
-    unrolled = ",\n    ".join(steps)
+        for i in range(LP_ITER)
+    )
+
+
+def _label_prop_oracle() -> str:
+    """The min-label unroll plus the community-size distribution."""
     return f"""
     WITH baskets AS (
       SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem
@@ -418,7 +442,7 @@ def _label_prop_oracle() -> str:
     l0 AS MATERIALIZED (
       SELECT DISTINCT src AS node, CAST(src AS BIGINT) AS label FROM edges
     ),
-    {unrolled},
+    {_lp_unroll()},
     comm AS (
       SELECT label, CAST(count(*) AS BIGINT) AS community_size
       FROM l{LP_ITER} GROUP BY label
@@ -445,12 +469,12 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic, unlike frequency-based LPA whose ties need RNG —
     which is what makes an exact cross-engine oracle possible.
 
-    The supersteps are ``_min_labels``; the label vector is node-sized.
+    The supersteps are ``min_labels``; the label vector is node-sized.
     The output is the community-size distribution — bounded by the
     largest community, not by graph size."""
     # every superstep joins against the edge list; materialize once
     edges = _directed(_copurchase_edges(spark, sf_dir)).localCheckpoint(eager=True)
-    comm = _min_labels(edges).groupBy("label").agg(
+    comm = min_labels(edges, LP_ITER).groupBy("label").agg(
         F.count(F.lit(1)).alias("community_size")
     )
     return (
@@ -796,22 +820,9 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _modularity_oracle() -> str:
-    """Label-propagation unroll (same steps as _label_prop_oracle) plus
-    the exact-integer Newman modularity: Q = Σ_c(4m·L_c − D_c²)/(4m²),
-    where every numerator term is a BIGINT."""
-    steps = []
-    for i in range(LP_ITER):
-        steps.append(
-            f"""l{i + 1} AS MATERIALIZED (
-      SELECT l.node AS node,
-             CAST(least(l.label, min(nl.label)) AS BIGINT) AS label
-      FROM l{i} l
-      JOIN edges e ON e.src = l.node
-      JOIN l{i} nl ON nl.node = e.dst
-      GROUP BY l.node, l.label
-    )"""
-        )
-    unrolled = ",\n    ".join(steps)
+    """The min-label unroll (as in _label_prop_oracle) plus the
+    exact-integer Newman modularity: Q = Σ_c(4m·L_c − D_c²)/(4m²), where
+    every numerator term is a BIGINT."""
     return f"""
     WITH baskets AS (
       SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem
@@ -830,7 +841,7 @@ def _modularity_oracle() -> str:
     l0 AS MATERIALIZED (
       SELECT DISTINCT src AS node, CAST(src AS BIGINT) AS label FROM edges
     ),
-    {unrolled},
+    {_lp_unroll()},
     deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS d
             FROM edges GROUP BY src),
     mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM e0),
@@ -881,8 +892,9 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup (D_c), both label-keyed aggregates after."""
     # read three times: edges union, m count, intra-edge join
     e0 = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
-    edges = _directed(e0).localCheckpoint(eager=True)
-    labels = _min_labels(edges).localCheckpoint(eager=True)  # read 2x below
+    edges = _directed(e0)
+    # read 3x below; uncut, every read re-plans the last superstep
+    labels = min_labels(edges, LP_ITER).localCheckpoint(eager=True)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
     )

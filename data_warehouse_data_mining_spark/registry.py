@@ -16,6 +16,7 @@ VALUES:
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -33,6 +34,26 @@ class Query:
 
 
 _REGISTRY: dict[str, Query] = {}
+
+# Every module that registers queries, in the order an externally capped
+# correctness sweep walks them. Headliners and the round-robin's modules
+# sort by this list, not by which module a process imported first
+# (operator modules import each other). Flagship/headline modules come
+# first so a bounded sweep always covers the surface that matters most;
+# r1's sweep stopped at 50 queries and missed 6 of 8 headline queries
+# because this list was alphabetical.
+_MODULES = tuple(f"data_warehouse_data_mining_spark.{m}" for m in (
+    "operators.relational", "operators.tpch", "operators.windows",
+    "operators.text", "operators.similarity", "operators.dedup",
+    "streaming.windows", "streaming.joins", "streaming.stateful",
+    "operators.advanced", "operators.mining", "operators.mining_stats",
+    "operators.mining_policy", "operators.mining_causal",
+    "operators.mining_ratings", "operators.graph", "operators.sketches",
+    "operators.quality", "operators.multimodal", "operators.association",
+    "operators.udfs", "operators.privacy", "operators.scd",
+    "operators.packing", "operators.ranking", "operators.curation",
+    "ml.queries", "pipelines",
+))
 
 
 def register(name: str, oracle: str, headline: bool = False) -> Callable[[QueryFn], QueryFn]:
@@ -138,7 +159,9 @@ def all_queries() -> dict[str, Query]:
     green, recheck = _ensure_loaded()
     from itertools import zip_longest
 
-    pinned = [q for q in _REGISTRY.values() if q.headline and q.name not in green]
+    rank = {m: i for i, m in enumerate(_MODULES)}
+    by_rank = sorted(_REGISTRY.values(), key=lambda q: rank[q.builder.__module__])
+    pinned = [q for q in by_rank if q.headline and q.name not in green]
     pinned += [
         _REGISTRY[n]
         for n in recheck
@@ -155,7 +178,7 @@ def all_queries() -> dict[str, Query]:
             out.extend(q for q in wave if q is not None)
         return out
 
-    rest = [q for q in _REGISTRY.values() if q.name not in pinned_names]
+    rest = [q for q in by_rank if q.name not in pinned_names]
     fresh = round_robin([q for q in rest if q.name not in green])
     seen = round_robin([q for q in rest if q.name in green])
     ordered = pinned + fresh + seen
@@ -185,39 +208,7 @@ def _ensure_loaded() -> tuple[frozenset[str], tuple[str, ...]]:
     global _history
     if _history is not None:
         return _history
-    # Import order = registration order = the order an externally capped
-    # correctness sweep walks the registry. Flagship/headline modules come
-    # first so a bounded sweep always covers the surface that matters most;
-    # r1's sweep stopped at 50 queries and missed 6 of 8 headline queries
-    # because this list was alphabetical.
-    from data_warehouse_data_mining_spark.operators import relational  # noqa: F401
-    from data_warehouse_data_mining_spark.operators import tpch  # noqa: F401
-    from data_warehouse_data_mining_spark.operators import windows  # noqa: F401
-    from data_warehouse_data_mining_spark.operators import text  # noqa: F401
-    from data_warehouse_data_mining_spark.operators import similarity  # noqa: F401
-    from data_warehouse_data_mining_spark.operators import dedup  # noqa: F401
-    from data_warehouse_data_mining_spark.streaming import windows as stream_windows  # noqa: F401
-    from data_warehouse_data_mining_spark.streaming import joins as stream_joins  # noqa: F401
-    from data_warehouse_data_mining_spark.streaming import stateful as stream_stateful  # noqa: F401
-    from data_warehouse_data_mining_spark.operators import advanced  # noqa: F401
-    from data_warehouse_data_mining_spark.operators import mining  # noqa: F401
-    from data_warehouse_data_mining_spark.operators import mining_stats  # noqa: F401
-    from data_warehouse_data_mining_spark.operators import mining_policy  # noqa: F401
-    from data_warehouse_data_mining_spark.operators import mining_causal  # noqa: F401
-    from data_warehouse_data_mining_spark.operators import mining_ratings  # noqa: F401
-    from data_warehouse_data_mining_spark.operators import graph  # noqa: F401
-    from data_warehouse_data_mining_spark.operators import sketches  # noqa: F401
-    from data_warehouse_data_mining_spark.operators import quality  # noqa: F401
-    from data_warehouse_data_mining_spark.operators import multimodal  # noqa: F401
-    from data_warehouse_data_mining_spark.operators import association  # noqa: F401
-    from data_warehouse_data_mining_spark.operators import udfs  # noqa: F401
-    from data_warehouse_data_mining_spark.operators import privacy  # noqa: F401
-    from data_warehouse_data_mining_spark.operators import scd  # noqa: F401
-    from data_warehouse_data_mining_spark.operators import packing  # noqa: F401
-    from data_warehouse_data_mining_spark.operators import ranking  # noqa: F401
-    from data_warehouse_data_mining_spark.operators import curation  # noqa: F401
-    from data_warehouse_data_mining_spark.ml import queries as ml_queries  # noqa: F401
-    from data_warehouse_data_mining_spark import pipelines  # noqa: F401
-
+    for module in _MODULES:
+        importlib.import_module(module)
     _history = _driver_history()
     return _history

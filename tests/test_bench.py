@@ -70,3 +70,15 @@ def test_prior_mins_prefer_the_line_cpus(tmp_path, monkeypatch):
     line = {"sf": 0.1, "queries_min": {"q": 2.0}}
     (tmp_path / "BENCH_r02.json").write_text(json.dumps({"cpus": 32, "parsed": line}))
     assert bench._prior_mins("0.1") == {"q": 2.0}
+
+
+def test_preflight_load_names_the_host_cpu_count_nproc(monkeypatch):
+    """``BENCH_DETAIL.json``'s ``preflight_load`` records ``os.cpu_count()``
+    as ``nproc``, the key the JSON line uses for it; ``cpus`` means the
+    ``local[N]`` count there, so the snapshot must not reuse that name."""
+    monkeypatch.syspath_prepend(REPO)
+    import bench
+
+    snap = bench._preflight_load()
+    assert "cpus" not in snap
+    assert snap["nproc"] == (os.cpu_count() or 1)

@@ -140,10 +140,37 @@ def test_edited_builder_joins_driver_recheck_group(tmp_path):
     )
     order = json.loads(out.stdout.splitlines()[-1])
 
-    # headliners keep registration order, which depends on which modules
-    # this process imported first; the re-check group is sorted by name
-    head = {n for n in qs if qs[n].headline and n not in green}
+    # headliners keep registry module order; the re-check group is
+    # sorted by name
+    head = [n for n in qs if qs[n].headline and n not in green]
     recheck = [n for n in sorted({n for n in recheck if n in qs} | {edited}) if n not in head]
-    assert set(order[: len(head)]) == head
+    assert order[: len(head)] == head
     assert order[len(head) : len(head) + len(recheck)] == recheck
     assert kept in order[len(head) + len(recheck) :]
+
+
+def test_all_queries_order_ignores_what_was_imported_first():
+    """The sweep order follows the registry's module list, not which
+    operator module a process imported first: importing operators.dedup
+    (which imports operators.graph) before the registry leaves every
+    position unchanged. Each order comes from a fresh subprocess."""
+    import json
+    import subprocess
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+    def order(first_import: str) -> list[str]:
+        probe = (
+            "import json\n"
+            f"{first_import}\n"
+            "from data_warehouse_data_mining_spark.registry import all_queries\n"
+            "print(json.dumps(list(all_queries())))\n"
+        )
+        out = subprocess.run(
+            [sys.executable, "-c", probe], cwd=repo, check=True,
+            env={**os.environ, "PYTHONPATH": repo},
+            capture_output=True, text=True,
+        )
+        return json.loads(out.stdout.splitlines()[-1])
+
+    assert order("import data_warehouse_data_mining_spark.operators.dedup") == order("")

@@ -200,7 +200,10 @@ def test_iterative_loops_checkpoint_truncates_lineage(spark):
     not a chain of every superstep's joins (uncut: label propagation
     10 joins, textrank 16, MMR 12). r2's un-checkpointed
     plans audited at 309 / 4,788 codegen operators — this pins the fix."""
-    from data_warehouse_data_mining_spark.operators.dedup import neardup_clusters
+    from data_warehouse_data_mining_spark.operators.dedup import (
+        dedup_keep_canonical,
+        neardup_clusters,
+    )
     from data_warehouse_data_mining_spark.operators.graph import (
         graph_label_propagation,
         graph_modularity,
@@ -214,6 +217,7 @@ def test_iterative_loops_checkpoint_truncates_lineage(spark):
     for builder, max_joins in [
         (graph_pagerank, 2),
         (neardup_clusters, 2),
+        (dedup_keep_canonical, 1),  # the n_chars join over the cut labels
         (graph_label_propagation, 2),  # last of 5 supersteps, cut every 2
         (graph_modularity, 6),  # Q's own joins over the cut labels
         (textrank_keywords, 2),  # last superstep: 2 joins

@@ -620,6 +620,41 @@ def test_modularity_bounds_and_consistency(spark):
     assert row["modularity"] >= 0.0
 
 
+def test_min_labels_on_a_chain_and_a_pair(spark):
+    """graph.min_labels on a hand-built graph, a 6-node chain 1-2-…-6
+    plus a separate pair 10-11: run to its fixpoint it equals a Python
+    union-find's min-id components; one fixed superstep gives each node
+    the minimum over itself and its 1-hop neighbours; fixed supersteps
+    reach the fixpoint once they cover the chain's diameter (5)."""
+    from data_warehouse_data_mining_spark.operators.graph import min_labels
+
+    undirected = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (10, 11)]
+    directed = undirected + [(b, a) for a, b in undirected]
+    edges = spark.createDataFrame(directed, "src long, dst long")
+
+    root: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while root.setdefault(x, x) != x:
+            x = root[x]
+        return x
+
+    for a, b in undirected:
+        ra, rb = find(a), find(b)
+        root[max(ra, rb)] = min(ra, rb)
+    components = {n: find(n) for n in root}
+
+    def labels(max_iters: int, **kw) -> dict[int, int]:
+        out = min_labels(edges, max_iters, **kw).collect()
+        return {r["node"]: r["label"] for r in out}
+
+    assert labels(20, to_fixpoint=True) == components
+    one_hop = {n: min([n] + [d for s, d in directed if s == n]) for n in root}
+    assert labels(1) == one_hop
+    assert labels(5) == components
+    assert labels(4)[6] == 2  # one hop short of the diameter
+
+
 def test_binseg_changepoint_matches_python_mirror(spark, duck):
     """The argmax split recomputed in Python over DuckDB's exact daily
     counts must agree (same f(t)=SL²/nL+SR²/nR objective, earlier-day

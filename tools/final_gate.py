@@ -96,6 +96,10 @@ def _pytest_fast():
             + "::test_driver_sweep_unknown_only_name_exits_before_spark",
             os.path.join(REPO, "tests", "test_entry.py")
             + "::test_edited_builder_joins_driver_recheck_group",
+            os.path.join(REPO, "tests", "test_entry.py")
+            + "::test_all_queries_order_ignores_what_was_imported_first",
+            os.path.join(REPO, "tests", "test_bench.py")
+            + "::test_preflight_load_names_the_host_cpu_count_nproc",
             "-p", "no:cacheprovider",
         ],
         capture_output=True, text=True, cwd=REPO,
